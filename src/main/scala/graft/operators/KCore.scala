@@ -264,7 +264,7 @@ object KCore {
       .select(col("s_suppkey").cast("long").as("start"))
       .withColumn("cur", col("start"))
     // state is exactly one row per start node at every step
-    val bc = graft.scale.Pregel.broadcastState(spark, walk.count())
+    val bc = graft.scale.Pregel.broadcastState(spark, graft.scale.Pregel.rows(walk))
     for (t <- 1 to steps) {
       walk = graft.scale.Silver.scratch(
         graft.scale.Pregel.state(walk, bc)
@@ -401,9 +401,9 @@ object KCore {
         .distinct(), // per-round join key — see bfs
       "lbfs_edges")
     // state is (seed, node, dist) — |seeds| × the node bound
-    val nSeeds = seeds.count()
     val bc = graft.scale.Pregel.broadcastState(und.sparkSession,
-      graft.scale.Pregel.nodeBound(und, "a", math.max(1L, nSeeds)))
+      graft.scale.Pregel.nodeBound(und, "a",
+        math.max(1L, graft.scale.Pregel.rows(seeds))))
     // same monotone fixed-point exit as [[bfsOnUnd]] (per (seed, node))
     val fp = graft.scale.FixedPoint.relaxProbe(col("dist"), "lbfs")
     var dist = seeds.select(col("seed"), col("seed").as("node"),
@@ -750,7 +750,7 @@ object KCore {
     // of wedge pairs per round down to the ~1 MB of true supports, and the
     // SMJ back to e disappears (sup ⊆ e already). Above the cap the r14
     // fanned-SMJ shape is unchanged.
-    val bcE = graft.scale.Pregel.broadcastState(spark, 2L * e.count())
+    val bcE = graft.scale.Pregel.broadcastState(spark, 2L * graft.scale.Pregel.rows(e))
     var last: DataFrame = e.withColumn("support", lit(0L))
     var r = 0
     var done = false
@@ -859,10 +859,9 @@ object KCore {
     // frame as a BHJ build and wedge pairs are semi-filtered against the
     // adjacency BEFORE the cn aggregation (guide §2.3/§3.1/§3.2): only
     // wedges whose (i, j) IS an edge reach the exchange — measured 81 MB
-    // of wedge pairs down to the edge-bounded survivors — and the static
-    // SMJs of the stats-free checkpoint leaves become BHJs. Above the
-    // cap the r14 fanned-SMJ shape is unchanged.
-    val bcE = graft.scale.Pregel.broadcastState(spark, 2L * und.count())
+    // of wedge pairs down to the edge-bounded survivors. Above the cap
+    // the r14 fanned-SMJ shape is unchanged.
+    val bcE = graft.scale.Pregel.broadcastState(spark, 2L * graft.scale.Pregel.rows(und))
     val deg = graft.scale.Silver.scratch(
       und.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
         .withColumn("p", expr("1000000 div deg")),

@@ -73,18 +73,15 @@ object Triangles {
         "tri_edges")
     // degrees materialized once (they feed both orientation joins and
     // the wedge-mass aggregate — the aggregation used to re-run per
-    // consumer) and broadcast into the orientation joins when the
-    // measured node count fits (r15, the Pregel cap): the edge frame
-    // then never exchanges to pick up its endpoint degrees.
+    // consumer)
     val deg = graft.scale.Silver.scratch(
       und.select(col("x").as("v")).unionAll(und.select(col("y").as("v")))
         .groupBy("v").agg(count(lit(1)).as("deg")),
       "tri_deg")
-    val degB = graft.scale.Pregel.maybeBroadcast(deg, deg.count())
     // Orient x—y from the (deg, id)-smaller endpoint to the larger.
     val withDeg = und
-      .join(degB.withColumnRenamed("v", "x").withColumnRenamed("deg", "dx"), Seq("x"))
-      .join(degB.withColumnRenamed("v", "y").withColumnRenamed("deg", "dy"), Seq("y"))
+      .join(deg.withColumnRenamed("v", "x").withColumnRenamed("deg", "dx"), Seq("x"))
+      .join(deg.withColumnRenamed("v", "y").withColumnRenamed("deg", "dy"), Seq("y"))
     val xOrd = struct(col("dx").as("d"), col("x").as("n"))
     val yOrd = struct(col("dy").as("d"), col("y").as("n"))
     val out = graft.scale.Silver.scratch(withDeg.select(
@@ -211,15 +208,12 @@ object Triangles {
       "assort_edges")
     val sym = pairs.unionAll(pairs.select(col("y").as("x"), col("x").as("y")))
     // degrees materialized once (they fed two join branches — the
-    // aggregation used to run per consumer) and broadcast when the
-    // measured node count fits (r15, the Pregel cap): the symmetrized
-    // edge frame then never exchanges for either endpoint join.
+    // aggregation used to run per consumer)
     val deg = graft.scale.Silver.scratch(
       sym.groupBy(col("x").as("v")).agg(count(lit(1)).as("d")), "assort_deg")
-    val degB = graft.scale.Pregel.maybeBroadcast(deg, deg.count())
     val scored = sym
-      .join(degB.select(col("v").as("x"), col("d").as("dx")), "x")
-      .join(degB.select(col("v").as("y"), col("d").as("dy")), "y")
+      .join(deg.select(col("v").as("x"), col("d").as("dx")), "x")
+      .join(deg.select(col("v").as("y"), col("d").as("dy")), "y")
       .select(lit("all").as("g"), col("dx"), col("dy"))
     Regression.groupedOls(scored, Seq("g"), col("dx"), col("dy"))
       .select("g", "n", "slope", "intercept", "corr")

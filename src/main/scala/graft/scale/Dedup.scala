@@ -592,10 +592,11 @@ object Dedup {
         .distinct(),
       "iter_0")
     // distinct nodes <= 2·|raw| — the cheap bound off the materialized
-    // input's block counts (the Pregel nodeBound2 argument)
-    val rawCnt = raw.count()
-    val bc = graft.scale.Pregel.broadcastState(edges.sparkSession,
-      if (rawCnt > Long.MaxValue / 2) Long.MaxValue else rawCnt * 2)
+    // input's own row count (the Pregel nodeBound2 argument)
+    val bc = graft.scale.Pregel.broadcastState(edges.sparkSession, {
+      val rawCnt = graft.scale.Pregel.rows(raw)
+      if (rawCnt > Long.MaxValue / 2) Long.MaxValue else rawCnt * 2
+    })
     val nodes = raw.select(col("u").as("node"))
       .union(raw.select(col("v").as("node"))).distinct()
     var cur = raw.filter(col("u") =!= col("v"))

@@ -1,6 +1,7 @@
 package graft.scale
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Materialization point for intermediates that feed multiple plan
   * branches (shingle rows, LSH signatures, ANN index assignments).
@@ -12,7 +13,10 @@ import org.apache.spark.sql.DataFrame
   *  - default: eager `localCheckpoint` — fast, zero I/O setup, right for
   *    a single-JVM/local run. NOT fault-tolerant: executor-local blocks
   *    die with the executor, so on a real cluster a lost node kills the
-  *    job instead of recomputing.
+  *    job instead of recomputing. The leaf carries the row count the
+  *    checkpoint job observed ([[org.apache.spark.sql.graft.Shims.withRowCount]]),
+  *    so the planner broadcasts a small materialized frame on its own
+  *    under `spark.sql.autoBroadcastJoinThreshold`.
   *  - `spark.graft.silver.dir` set: write-then-read a parquet silver
   *    table under that directory — the production path. Survives executor
   *    loss, is inspectable/reusable across jobs, and scans back columnar.
@@ -25,7 +29,7 @@ object Silver {
   /** Materialize `df` under `name`. With `spark.graft.silver.dir` set the
     * frame is persisted to `dir/name` (overwrite — content is
     * deterministic per query) and read back; otherwise eager
-    * localCheckpoint. */
+    * localCheckpoint with its observed row count. */
   def materialize(df: DataFrame, name: String): DataFrame = {
     val spark = df.sparkSession
     spark.conf.getOption("spark.graft.silver.dir") match {
@@ -33,7 +37,15 @@ object Silver {
         val path = s"$dir/$name"
         df.write.mode("overwrite").parquet(path)
         spark.read.parquet(path)
-      case None => df.localCheckpoint(true)
+      case None =>
+        // the checkpoint job counts its rows on the side (the FixedPoint
+        // device, no extra job), read back from its own executed plan
+        // rather than through an Observation, which waits on listeners
+        val tag = s"silver_rows_${java.util.UUID.randomUUID().toString.take(8)}"
+        val observed = df.observe(tag, count(lit(1)))
+        val ck = observed.localCheckpoint(true)
+        org.apache.spark.sql.graft.Shims.withRowCount(
+          ck, observed.queryExecution.observedMetrics(tag).getLong(0))
     }
   }
 

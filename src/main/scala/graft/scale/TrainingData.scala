@@ -569,14 +569,13 @@ object TrainingData {
         pmod(conv(substring(md5(concat_ws("|",
             col("user"), col("part"), col("i"))), 1, 15), 16, 10)
           .cast("long"), col("max_part")) + 1L)
-    // r15: the anti-join's build side is the materialized positives
-    // frame with a known row count — broadcast it under the Pregel cap
-    // (saves exchanging BOTH the m×-exploded candidate frame and the
-    // positives; corpus-sized positives beyond the cap keep the shuffle
-    // anti-join).
-    cands.join(graft.scale.Pregel.maybeBroadcast(
-        positives.select(col("user"), col("part").as("neg_part")),
-        positives.count()),
+    // the anti-join's build side is the materialized positives frame:
+    // broadcast when it fits, which saves exchanging the m×-exploded
+    // candidate frame; over the broadcast threshold at sf0.1, sort-merging
+    // it measured 1.3× slower
+    val bc = Pregel.broadcastState(spark, Pregel.rows(positives))
+    cands.join(Pregel.state(
+        positives.select(col("user"), col("part").as("neg_part")), bc),
         Seq("user", "neg_part"), "left_anti")
       .select(col("user"), col("part"), col("i").cast("long").as("i"),
         col("neg_part"))

@@ -1,5 +1,7 @@
 package graft.tools
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.graft.Shims
@@ -10,7 +12,14 @@ import graft.SparkEntry
   * flag scale smells — missing parquet filter pushdown, unexpected
   * cartesian products, full-scan sorts where a top-k was intended,
   * queries with no whole-stage-codegen span at all.
-  * Usage: runMain graft.tools.ExplainAudit <sfDir> [namePrefix]
+  *
+  * Usage (cpus via SPARK_GRAFT_CPUS, default all cores):
+  *  - `runMain graft.tools.ExplainAudit <sfDir> [namePrefix]` — audit:
+  *    print every matching plan with its smells to stdout.
+  *  - `runMain graft.tools.ExplainAudit <sfDir> <outDir> <suffix> <q_a,q_b,...>`
+  *    — dump: write each named query's plan to
+  *    `<outDir>/<name>_<suffix>.txt`, the before/after plan evidence the
+  *    optimization rounds commit under `plans/`.
   *
   * The static-plan VIEW ([[staticSession]] + [[stripOutputSort]]) is
   * shared with `PlanGateSpec` — the audit tool and the regression gates
@@ -50,10 +59,17 @@ object ExplainAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val prefix = if (args.length > 1) args(1) else ""
-    val iso = staticSession(graft.GraftSession.local(cpus = 8))
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val iso = staticSession(graft.GraftSession.local(cpus = cpus))
     iso.sparkContext.setLogLevel("ERROR")
+    if (args.length >= 4) dump(iso, sfDir, args(1), args(2),
+      args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    else audit(iso, sfDir, if (args.length > 1) args(1) else "")
+    iso.stop()
+  }
 
+  private def audit(iso: SparkSession, sfDir: String, prefix: String): Unit =
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(_._1.startsWith(prefix))
       .foreach { case (name, fn) =>
@@ -67,6 +83,15 @@ object ExplainAudit {
         println(s"\n========== $name ${if (smells.isEmpty) "" else "SMELLS: " + smells.mkString(",")}")
         audited.explain("formatted")
       }
-    iso.stop()
+
+  private def dump(iso: SparkSession, sfDir: String, outDir: String,
+                   suffix: String, names: Seq[String]): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { n =>
+      val txt = stripOutputSort(iso, SparkEntry.queries(n)(iso, sfDir))
+        .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+      Files.writeString(Paths.get(outDir, s"${n}_$suffix.txt"), txt)
+      println(s"wrote $outDir/${n}_$suffix.txt")
+    }
   }
 }

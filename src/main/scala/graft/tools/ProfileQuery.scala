@@ -11,16 +11,29 @@ import graft.SparkEntry
   * harness for the optimization rounds: per-query seconds come from the
   * bench; THIS tool answers "which jobs inside the query cost what".
   *
+  * Listener events arrive asynchronously, so nothing is keyed on arrival
+  * order: each job is filed under the rep named by its job description,
+  * each stage under the job whose `stageIds` listed it first, and the
+  * report prints after `stop()` has drained the listener bus.
+  *
   * Usage: runMain graft.tools.ProfileQuery <sfDir> <q_a,q_b,...> [reps]
-  * (cpus via SPARK_GRAFT_CPUS, default 32 — match the bench shape).
+  * (cpus via SPARK_GRAFT_CPUS, default all cores).
   */
 object ProfileQuery {
+
+  private final case class Job(id: Int, rep: String, t0: Long,
+                               stages: Int, tasks: Int) {
+    var t1 = 0L
+    var shuffleRead = 0L
+    var shuffleWrite = 0L
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
     val spark = graft.GraftSession.builder(cpus)
       .master(s"local[$cpus]")
       .config("spark.sql.adaptive.enabled", "true")
@@ -28,65 +41,61 @@ object ProfileQuery {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    case class Job(id: Int, t0: Long, var t1: Long = 0L,
-                   var stages: Int = 0, var tasks: Int = 0,
-                   var shuffleRead: Long = 0L, var shuffleWrite: Long = 0L)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
-    val order = new java.util.concurrent.CopyOnWriteArrayList[Int]()
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.put(e.jobId, Job(e.jobId, System.nanoTime(),
+        val rep = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")
+        jobs.put(e.jobId, Job(e.jobId, rep, e.time,
           stages = e.stageInfos.size,
           tasks = e.stageInfos.map(_.numTasks).sum))
-        order.add(e.jobId)
+        e.stageIds.foreach(stageJob.putIfAbsent(_, e.jobId))
       }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        Option(jobs.get(e.jobId)).foreach(_.t1 = System.nanoTime())
-      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(jobs.get(e.jobId)).foreach(_.t1 = e.time)
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        // attribute to the most recent unfinished job (local mode: jobs
-        // run sequentially within one query)
         val m = e.stageInfo.taskMetrics
-        if (m != null && !order.isEmpty) {
-          var i = order.size() - 1
-          while (i >= 0 && jobs.get(order.get(i)).t1 != 0L) i -= 1
-          if (i >= 0) {
-            val j = jobs.get(order.get(i))
+        Option(stageJob.get(e.stageInfo.stageId))
+          .flatMap(id => Option(jobs.get(id)))
+          .filter(_ => m != null)
+          .foreach { j =>
             j.shuffleRead += m.shuffleReadMetrics.totalBytesRead
             j.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
           }
-        }
       }
     })
 
-    names.foreach { n =>
-      val fn = SparkEntry.queries(n)
-      (1 to reps).foreach { r =>
-        jobs.clear(); order.clear()
-        spark.sparkContext.setJobDescription(s"$n rep$r")
-        val w0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val wall = (System.nanoTime() - w0) / 1e9
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        // per-job segments in start order, plus inter-job driver gaps
-        val js = {
-          import scala.jdk.CollectionConverters._
-          order.asScala.map(jobs.get).toSeq
-        }
-        val jobSum = js.map(j => (j.t1 - j.t0) / 1e9).sum
-        println(f"== $n rep$r wall=$wall%.3f s, ${js.size} jobs " +
-          f"(sum ${jobSum}%.3f s, driver gaps ${wall - jobSum}%.3f s)")
-        var prevEnd = 0L
-        js.foreach { j =>
-          val gap = if (prevEnd == 0L) 0.0 else (j.t0 - prevEnd) / 1e9
-          prevEnd = j.t1
-          println(f"   job ${j.id}%3d  ${(j.t1 - j.t0) / 1e9}%7.3f s  " +
-            f"stages=${j.stages}%2d tasks=${j.tasks}%4d  " +
-            f"shufR=${j.shuffleRead / 1024}%8d KB shufW=${j.shuffleWrite / 1024}%8d KB" +
-            (if (gap > 0.05) f"   [gap before: $gap%.3f s]" else ""))
-        }
+    val walls = for (n <- names.toSeq; r <- 1 to reps) yield {
+      val rep = s"$n rep$r"
+      spark.sparkContext.setJobDescription(rep)
+      val w0 = System.currentTimeMillis()
+      SparkEntry.queries(n)(spark, sfDir).count()
+      val wall = System.currentTimeMillis() - w0
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      rep -> wall
+    }
+    spark.stop() // drains the listener bus: every event below has arrived
+
+    import scala.jdk.CollectionConverters._
+    val byRep = jobs.values.asScala.toSeq.groupBy(_.rep)
+    walls.foreach { case (rep, wallMs) =>
+      // per-job segments in start order, plus inter-job driver gaps
+      val js = byRep.getOrElse(rep, Nil).sortBy(_.id)
+      val wall = wallMs / 1e3
+      val jobSum = js.map(j => (j.t1 - j.t0) / 1e3).sum
+      println(f"== $rep wall=$wall%.3f s, ${js.size} jobs " +
+        f"(sum ${jobSum}%.3f s, driver gaps ${wall - jobSum}%.3f s)")
+      var prevEnd = 0L
+      js.foreach { j =>
+        val gap = if (prevEnd == 0L) 0.0 else (j.t0 - prevEnd) / 1e3
+        prevEnd = j.t1
+        println(f"   job ${j.id}%3d  ${(j.t1 - j.t0) / 1e3}%7.3f s  " +
+          f"stages=${j.stages}%2d tasks=${j.tasks}%4d  " +
+          f"shufR=${j.shuffleRead / 1024}%8d KB shufW=${j.shuffleWrite / 1024}%8d KB" +
+          (if (gap > 0.05) f"   [gap before: $gap%.3f s]" else ""))
       }
     }
-    spark.stop()
   }
 }

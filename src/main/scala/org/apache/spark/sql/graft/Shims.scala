@@ -12,6 +12,41 @@ object Shims {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Re-wrap an eager `localCheckpoint` whose job counted `rows` so its
+    * leaf reports that row count and Spark's size for it (row count ×
+    * the schema's row width, the convention of every other leaf the
+    * planner compares against `spark.sql.autoBroadcastJoinThreshold`).
+    * Spark's checkpoint leaf keeps the ESTIMATE of the plan it was
+    * computed from: a 1000-row aggregate of a 20 MB input still claims
+    * 20 MB, so the planner never broadcasts it, while a join out of
+    * compressed parquet can claim a small fraction of its real size. */
+  def withRowCount(df: DataFrame, rows: Long): DataFrame = df.queryExecution.logical match {
+    case l: org.apache.spark.sql.execution.LogicalRDD =>
+      val size = org.apache.spark.sql.catalyst.plans.logical.statsEstimation
+        .EstimationUtils.getSizePerRow(l.output) * rows
+      val leaf = l.copy()(
+        df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+        Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(size, Some(rows))),
+        Some(l.constraints))
+      leaf.setAnalyzed() // a copy of an analyzed leaf: skip the analyzer's ~1 ms
+      ofRows(df.sparkSession, leaf)
+    case _ => df
+  }
+
+  /** The exact row count [[withRowCount]] put on a checkpoint leaf, or
+    * None when `df` is not such a leaf (a projection over it, a parquet
+    * scan, a stats-free `LogicalRDD`): then only a count job knows. */
+  def leafRowCount(df: DataFrame): Option[Long] = df.queryExecution.logical match {
+    case l: org.apache.spark.sql.execution.LogicalRDD => l.stats.rowCount.map(_.toLong)
+    case _ => None
+  }
+
+  /** `spark.sql.autoBroadcastJoinThreshold` in bytes; negative = never
+    * broadcast by size. */
+  def autoBroadcastThreshold(spark: SparkSession): Long =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold
+
   /** Spark 4's Column wraps a ColumnNode, not a catalyst Expression.
     * `ExpressionUtils.expression` only produces a LAZY
     * `ColumnNodeExpression` wrapper (non-serializable, breaks task

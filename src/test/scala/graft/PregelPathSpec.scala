@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 
 /** The iterative graph operators pick a per-round join strategy at
   * runtime (graft.scale.Pregel): broadcast the node-sized state frame
-  * when the node space fits `spark.graft.graph.broadcastStateRows`,
-  * else keep the co-partitioned shuffle path. The two paths MUST be
+  * when the node space fits `Pregel.MaxStateRows` and broadcasting is
+  * allowed, else keep the co-partitioned shuffle path. The two paths MUST be
   * result-identical (all round arithmetic is exact integer aggregation)
   * — this spec pins that by running representative queries of every
   * iterative shape on both paths at sf0.001 and exact-comparing rows.
@@ -28,9 +28,10 @@ class PregelPathSpec extends SparkSpec {
   test("broadcast and shuffle state paths are result-identical") {
     val bcSession = spark.newSession()
     val shSession = spark.newSession()
-    // force the decisions: everything fits / nothing fits
-    bcSession.conf.set("spark.graft.graph.broadcastStateRows", Long.MaxValue.toString)
-    shSession.conf.set("spark.graft.graph.broadcastStateRows", "0")
+    // every sf0.001 graph fits MaxStateRows, so the default session takes
+    // the broadcast path; Spark's "no broadcast" setting pins the shuffle
+    // path
+    shSession.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     for (q <- queries) {
       val fn = SparkEntry.queries(q)
       val bc = rows(fn(bcSession, TestSpark.Sf0001))

@@ -29,4 +29,34 @@ class SilverSpec extends SparkSpec {
     assert(df.count() == 5)
     assert(new java.io.File(s"$tmp/named_table").isDirectory)
   }
+
+  test("materialize: the local leaf carries its observed size; the planner broadcasts it") {
+    import org.apache.spark.sql.functions._
+    // AQE off: the statically planned join is the planner's own choice
+    val iso = graft.tools.ExplainAudit.staticSession(spark)
+    val noBc = graft.tools.ExplainAudit.staticSession(spark)
+    noBc.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    def input(s: org.apache.spark.sql.SparkSession) =
+      s.range(0, 2000000).select(col("id"), (col("id") % 1000).as("k"))
+    def agg(s: org.apache.spark.sql.SparkSession) =
+      input(s).groupBy("k").agg(count(lit(1)).as("c"))
+    val leaf = Silver.materialize(agg(iso), "stats_leaf")
+    val estimate = agg(iso).queryExecution.optimizedPlan.stats.sizeInBytes
+    val measured = leaf.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(leaf.count() == 1000)
+    // the graph operators' bounds read this count instead of running a job
+    assert(org.apache.spark.sql.graft.Shims.leafRowCount(leaf).contains(1000L))
+    assert(org.apache.spark.sql.graft.Shims.leafRowCount(leaf.select("k")).isEmpty)
+    assert(estimate > BigInt(org.apache.spark.sql.graft.Shims.autoBroadcastThreshold(iso)),
+      s"input estimate $estimate alone would broadcast")
+    assert(measured * 50 < estimate,
+      s"leaf size $measured is not far below the input estimate $estimate")
+    val bhj = input(iso).join(leaf, "k").queryExecution.executedPlan.toString
+    assert(bhj.contains("BroadcastHashJoin") && !bhj.contains("SortMergeJoin"),
+      s"join against the measured leaf did not broadcast:\n$bhj")
+    val leafOff = Silver.materialize(agg(noBc), "stats_leaf_off")
+    val smj = input(noBc).join(leafOff, "k").queryExecution.executedPlan.toString
+    assert(smj.contains("SortMergeJoin") && !smj.contains("BroadcastHashJoin"),
+      s"threshold -1 did not pin the shuffle join:\n$smj")
+  }
 }
