@@ -781,7 +781,7 @@ object Analytics {
     // over the broadcast threshold at sf0.1, but sort-merging the edges
     // measured 1.2× slower than broadcasting them
     val opB = graft.scale.Pregel.state(op, graft.scale.Pregel.broadcastState(
-      spark, graft.scale.Pregel.rows(op)))
+      spark, graft.scale.Silver.rows(op)))
     op.as("a")
       .join(opB.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
       .join(opB.as("c"), col("b.o") === col("c.o") && col("b.p") < col("c.p"))

@@ -615,21 +615,20 @@ object Distribution {
         .agg(count(lit(1)).as("c")),
       "ipf_cells") // feeds the total AND round 0
     val n = cells.agg(sum(col("c")).as("n"))
-    var w = cells.crossJoin(broadcast(n))
+    var w = graft.scale.Silver.scratch(cells.crossJoin(broadcast(n))
       .withColumn("tgt", expr("(n * 1000000) div 5"))
       .select(col("segment"), col("prio"), col("c"), col("tgt"),
-        (col("c") * lit(1000000L)).as("w"))
-      .localCheckpoint(true)
+        (col("c") * lit(1000000L)).as("w")), "ipf_w")
     for (_ <- 1 to rounds) {
       val rs = w.groupBy("segment").agg(sum(col("w")).as("rs"))
       val wr = w.join(broadcast(rs), "segment")
         .select(col("segment"), col("prio"), col("c"), col("tgt"),
           expr(s"(cast(w as $d38) * cast(tgt as $d38)) div rs").as("w"))
       val cs = wr.groupBy("prio").agg(sum(col("w")).as("cs"))
-      w = wr.join(broadcast(cs), "prio")
+      w = graft.scale.Silver.scratch(wr.join(broadcast(cs), "prio")
         .select(col("segment"), col("prio"), col("c"), col("tgt"),
-          expr(s"(cast(w as $d38) * cast(tgt as $d38)) div cs").as("w"))
-        .localCheckpoint(true)
+          expr(s"(cast(w as $d38) * cast(tgt as $d38)) div cs").as("w")),
+        "ipf_w")
     }
     w.select(col("segment"), col("prio"), col("c"),
         col("w").as("w_micro"),

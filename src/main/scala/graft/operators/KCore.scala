@@ -264,7 +264,7 @@ object KCore {
       .select(col("s_suppkey").cast("long").as("start"))
       .withColumn("cur", col("start"))
     // state is exactly one row per start node at every step
-    val bc = graft.scale.Pregel.broadcastState(spark, graft.scale.Pregel.rows(walk))
+    val bc = graft.scale.Pregel.broadcastState(spark, graft.scale.Silver.rows(walk))
     for (t <- 1 to steps) {
       walk = graft.scale.Silver.scratch(
         graft.scale.Pregel.state(walk, bc)
@@ -400,10 +400,13 @@ object KCore {
           edges.select(col("b").as("a"), col("a").as("b"))), col("a"))
         .distinct(), // per-round join key — see bfs
       "lbfs_edges")
-    // state is (seed, node, dist) — |seeds| × the node bound
+    // state is (seed, node, dist) — |seeds| × the node bound; the seed
+    // bound is the plan's own row cap when it has one (a limit), so no
+    // count job runs for it
+    val nSeeds = seeds.queryExecution.optimizedPlan.maxRows
+      .getOrElse(graft.scale.Silver.rows(seeds))
     val bc = graft.scale.Pregel.broadcastState(und.sparkSession,
-      graft.scale.Pregel.nodeBound(und, "a",
-        math.max(1L, graft.scale.Pregel.rows(seeds))))
+      graft.scale.Pregel.nodeBound(und, "a", math.max(1L, nSeeds)))
     // same monotone fixed-point exit as [[bfsOnUnd]] (per (seed, node))
     val fp = graft.scale.FixedPoint.relaxProbe(col("dist"), "lbfs")
     var dist = seeds.select(col("seed"), col("seed").as("node"),
@@ -750,7 +753,7 @@ object KCore {
     // of wedge pairs per round down to the ~1 MB of true supports, and the
     // SMJ back to e disappears (sup ⊆ e already). Above the cap the r14
     // fanned-SMJ shape is unchanged.
-    val bcE = graft.scale.Pregel.broadcastState(spark, 2L * graft.scale.Pregel.rows(e))
+    val bcE = graft.scale.Pregel.broadcastState(spark, 2L * graft.scale.Silver.rows(e))
     var last: DataFrame = e.withColumn("support", lit(0L))
     var r = 0
     var done = false
@@ -861,7 +864,7 @@ object KCore {
     // wedges whose (i, j) IS an edge reach the exchange — measured 81 MB
     // of wedge pairs down to the edge-bounded survivors. Above the cap
     // the r14 fanned-SMJ shape is unchanged.
-    val bcE = graft.scale.Pregel.broadcastState(spark, 2L * graft.scale.Pregel.rows(und))
+    val bcE = graft.scale.Pregel.broadcastState(spark, 2L * graft.scale.Silver.rows(und))
     val deg = graft.scale.Silver.scratch(
       und.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
         .withColumn("p", expr("1000000 div deg")),

@@ -82,11 +82,13 @@ object Merge {
     *    where a mid-write crash plus checkpoint retry lost ALL prior
     *    state. (Directory rename is atomic on POSIX/HDFS; on object
     *    stores the transactional-table production target applies.)
-    *  - The batch is materialized ONCE (eager localCheckpoint) and
-    *    reused for the emptiness probe and the merge — `batch.isEmpty`
+    *  - The batch is materialized ONCE ([[graft.scale.Silver.scratch]])
+    *    and reused for the emptiness probe and the merge — `batch.isEmpty`
     *    on a raw foreachBatch frame re-scans the micro-batch source,
-    *    doubling source I/O per trigger. Writing to `.next` also means
-    *    the merge never overwrites its own input, so no second
+    *    doubling source I/O per trigger. The probe reads the row count
+    *    the materialization observed, so it runs no job of its own (a
+    *    count job only on the silver-dir path). Writing to `.next` also
+    *    means the merge never overwrites its own input, so no second
     *    materialization of the merged result is needed.
     *  - Version ties break on a whole-row content hash, so the winner is
     *    a pure function of the row SET — invariant to partitioning,
@@ -138,8 +140,8 @@ object Merge {
     }
     if (fs.exists(old)) fs.delete(old, true)
 
-    val b = batch.localCheckpoint(true)
-    if (b.isEmpty) return false
+    val b = graft.scale.Silver.scratch(batch, "upsert_batch")
+    if (graft.scale.Silver.rows(b) == 0) return false
     val current =
       if (fs.exists(live)) spark.read.schema(batch.schema).parquet(tableDir)
       else spark.createDataFrame(

@@ -80,7 +80,7 @@ object PageRank {
     // STATE and the edge list never shuffles (measured: the SMJ path
     // re-exchanged the edge frame every round at runtime — the two
     // checkpoints' partition counts never match).
-    val bc = graft.scale.Pregel.broadcastState(e.sparkSession, graft.scale.Pregel.rows(nodes))
+    val bc = graft.scale.Pregel.broadcastState(e.sparkSession, graft.scale.Silver.rows(nodes))
     val base = Init * 15L / 100L
     // integer-quantized ranks can reach an EXACT fixed point inside the
     // horizon; when two consecutive materialized rounds are checksum-
@@ -170,7 +170,7 @@ object PageRank {
           .unionAll(eSrc.select(col("dst").as("node"))), col("node"))
         .distinct(),
       "hits_nodes")
-    val bc = graft.scale.Pregel.broadcastState(eSrc.sparkSession, graft.scale.Pregel.rows(nodes))
+    val bc = graft.scale.Pregel.broadcastState(eSrc.sparkSession, graft.scale.Silver.rows(nodes))
     val eDst = if (bc) eSrc else graft.scale.Silver.scratch(
       graft.scale.Par.byKey(eSrc, col("dst")), "hits_edges_dst")
     // empty-graph guard: a null max would null every score (the
@@ -263,7 +263,7 @@ object PageRank {
           .unionAll(e.select(col("dst").as("node"))), col("node"))
         .distinct(),
       "lpa_nodes")
-    val bc = graft.scale.Pregel.broadcastState(e.sparkSession, graft.scale.Pregel.rows(nodes))
+    val bc = graft.scale.Pregel.broadcastState(e.sparkSession, graft.scale.Silver.rows(nodes))
     // synchronous LPA either reaches an exact fixed point or (bipartite
     // structure) a period-2 oscillation — both pin every remaining round
     // once confirmed frame-exactly, so the horizon's tail is skipped and

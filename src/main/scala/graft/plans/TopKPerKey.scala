@@ -13,19 +13,22 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * registered through `SparkSessionExtensions`
   * ([[GraftExtensions]]).
   *
-  * Why an operator instead of `row_number().over(partitionBy(key))`: the
-  * window form shuffles EVERY row to its key's reducer and only then
-  * discards all but k — at 100 TB with k=5 that is ~100 TB of shuffle
-  * for a few GB of output. This operator plans as
+  * This operator plans as
   *
   *   partial TopKPerKey (per input partition, bounded heaps)
   *     → hash exchange on the keys (inserted by EnsureRequirements from
   *       the final node's required distribution)
   *   final TopKPerKey (exact per-key top-k merge)
   *
-  * so at most `partitions · keys · k` rows reach the exchange — the same
-  * partial-aggregation trick Spark applies to `limit` (TakeOrdered) and
-  * hash aggregates, which it does NOT apply to ranking windows.
+  * so at most `partitions · keys · k` rows reach the exchange. Spark
+  * 4.1 also cuts the window form `row_number() <= k` below the
+  * exchange (`WindowGroupLimit … Partial`), but that partial needs its
+  * input SORTED by (keys, order): it pays a full sort of every input
+  * partition to keep k rows per key. The operator's edge is the
+  * bounded heaps — one pass, O(keys · k) memory, no partition sort.
+  * Measured on the sf0.1 embeddings (2000 points, 3.998M scored pairs,
+  * k=5, 4 cores, identical results, 6 alternating reps): TopKPerKey
+  * 10.7–14.1 s, the window form 14.0–16.1 s.
   *
   * Memory contract — bounded on both sides of the exchange:
   *

@@ -50,11 +50,6 @@ object Pregel {
     org.apache.spark.sql.graft.Shims.autoBroadcastThreshold(spark) >= 0 &&
       stateRowBound <= MaxStateRows
 
-  /** Row count of `df`: free for a [[Silver.materialize]]d leaf, whose
-    * checkpoint job counted it; a count job otherwise. */
-  def rows(df: DataFrame): Long =
-    org.apache.spark.sql.graft.Shims.leafRowCount(df).getOrElse(df.count())
-
   /** Distinct-node bound (times `mult` — the per-node state rows, e.g.
     * |seeds| for labeled BFS) for a MATERIALIZED edge frame whose `key`
     * column covers every node (a symmetrized edge list), computed as
@@ -65,7 +60,7 @@ object Pregel {
     * never pays a distinct pass whose answer is a foregone conclusion;
     * the distinct rides the checkpoint's hash(key) layout). */
   def nodeBound(und: DataFrame, key: String, mult: Long = 1L): Long = {
-    val edgeCnt = rows(und)
+    val edgeCnt = Silver.rows(und)
     if (edgeCnt > Long.MaxValue / math.max(1L, mult)) Long.MaxValue
     else if (edgeCnt * mult <= MaxStateRows) edgeCnt * mult
     else if (edgeCnt <= MaxStateRows * 32)
@@ -78,7 +73,7 @@ object Pregel {
     * edge, a < b): nodes live in BOTH endpoint columns, so the cheap
     * bound is 2·|edges| and the exact pass unions the endpoints. */
   def nodeBound2(e: DataFrame, ka: String, kb: String): Long = {
-    val edgeCnt = rows(e)
+    val edgeCnt = Silver.rows(e)
     if (edgeCnt > Long.MaxValue / 2) Long.MaxValue
     else if (edgeCnt * 2 <= MaxStateRows) edgeCnt * 2
     else if (edgeCnt <= MaxStateRows * 16)

@@ -695,7 +695,7 @@ object Search {
       .select(col("doc_id"), col("pos"), col("phrase"), col("witness_count"))
     // the true-size index is over the broadcast threshold at sf0.1, but
     // sort-merging it measured 2.2× slower than broadcasting it
-    val bc = Pregel.broadcastState(spark, Pregel.rows(pos))
+    val bc = Pregel.broadcastState(spark, Silver.rows(pos))
     val matches = p.join(
         Pregel.state(pos.select(col("doc_id"), (col("pos") - 1).as("pos"),
           col("term").as("t2")), bc),

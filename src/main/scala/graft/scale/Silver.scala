@@ -23,6 +23,11 @@ import org.apache.spark.sql.functions.{count, lit}
   *
   * The strategy is a session conf (not a parameter) so the choice is a
   * deployment decision, not plumbed through every operator signature.
+  *
+  * Files DERIVED from a corpus table (replay slices, audit tables,
+  * round-trip JSON) go through [[scaffold]] instead: written once per
+  * input content per JVM, under one temp root that one exit hook
+  * deletes.
   */
 object Silver {
 
@@ -56,4 +61,59 @@ object Silver {
     * reusable across jobs (e.g. minhash signatures) keep fixed names. */
   def scratch(df: DataFrame, prefix: String): DataFrame =
     materialize(df, s"${prefix}_${java.util.UUID.randomUUID().toString.take(8)}")
+
+  /** Row count of `df`: free for a [[materialize]]d checkpoint leaf,
+    * whose job counted it; a count job otherwise. */
+  def rows(df: DataFrame): Long =
+    org.apache.spark.sql.graft.Shims.leafRowCount(df).getOrElse(df.count())
+
+  /** The JVM's one temp root for scaffolds and call-scoped scratch dirs,
+    * created on first use; one shutdown hook deletes it whole. */
+  private[graft] lazy val root: java.nio.file.Path = {
+    val r = java.nio.file.Files.createTempDirectory("graft_scaffold_")
+    sys.addShutdownHook(deleteTree(r.toString))
+    r
+  }
+
+  /** A fresh directory under [[root]] for one call's scratch files;
+    * the caller may [[deleteTree]] it early, the exit hook otherwise. */
+  private[graft] def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(root, prefix).toString
+
+  /** Recursive delete (a no-op on a missing path). */
+  private[graft] def deleteTree(path: String): Unit = {
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete(); ()
+    }
+    rm(new java.io.File(path))
+  }
+
+  /** One build per key: the lazy val is the lock, so a key is written
+    * once while distinct keys (and a build that asks for another
+    * scaffold) proceed; a build that throws is retried on the next call. */
+  private final class Built(build: => String) { lazy val dir: String = build }
+
+  private val scaffolds =
+    scala.collection.concurrent.TrieMap.empty[(String, Long, String), Built]
+
+  private def key(input: String, what: String): (String, Long, String) = {
+    val in = new java.io.File(input).getCanonicalPath
+    (in, graft.sources.Tables.contentSignature(in), what)
+  }
+
+  /** Directory of the `what` files derived from the local corpus table
+    * at `input`: `write(dir)` fills a fresh dir under [[root]] the first
+    * time this JVM sees `input` with its current content, and every
+    * later call — any session — gets that dir back. The key holds the
+    * table's content signature, so an in-place rewrite misses; the
+    * superseded dir stays on disk until exit, because a lazily-read
+    * frame handed out before the rewrite may still scan it. */
+  def scaffold(input: String, what: String)(write: String => Unit): String =
+    scaffolds.getOrElseUpdate(key(input, what),
+      new Built({ val d = tempDir(what); write(d); d })).dir
+
+  /** The [[scaffold]] dir for `input`'s current content, if built. */
+  private[graft] def scaffolded(input: String, what: String): Option[String] =
+    scaffolds.get(key(input, what)).map(_.dir)
 }

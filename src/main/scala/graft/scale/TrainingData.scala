@@ -573,7 +573,7 @@ object TrainingData {
     // broadcast when it fits, which saves exchanging the m×-exploded
     // candidate frame; over the broadcast threshold at sf0.1, sort-merging
     // it measured 1.3× slower
-    val bc = Pregel.broadcastState(spark, Pregel.rows(positives))
+    val bc = Pregel.broadcastState(spark, Silver.rows(positives))
     cands.join(Pregel.state(
         positives.select(col("user"), col("part").as("neg_part")), bc),
         Seq("user", "neg_part"), "left_anti")

@@ -4,7 +4,11 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.graft.Shims
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkEntry
 
@@ -17,9 +21,16 @@ import graft.SparkEntry
   *  - `runMain graft.tools.ExplainAudit <sfDir> [namePrefix]` — audit:
   *    print every matching plan with its smells to stdout.
   *  - `runMain graft.tools.ExplainAudit <sfDir> <outDir> <suffix> <q_a,q_b,...>`
-  *    — dump: write each named query's plan to
-  *    `<outDir>/<name>_<suffix>.txt`, the before/after plan evidence the
-  *    optimization rounds commit under `plans/`.
+  *    — dump: write each named query's static plan to
+  *    `<outDir>/<name>_<suffix>.txt`, and the plans it EXECUTED (AQE on,
+  *    running the query's `graft.Bench` action, `count()`) to
+  *    `<outDir>/<name>_<suffix>_executed.txt` — the before/after plan
+  *    evidence the optimization rounds commit under `plans/`. The static
+  *    plan shows neither the jobs a [[graft.scale.Silver.materialize]]
+  *    runs while the query is built nor AQE's run-time changes; the
+  *    executed file lists every action (materializations, count jobs,
+  *    the final count) with its final plan, headed by a one-line join
+  *    summary that diffs cleanly.
   *
   * The static-plan VIEW ([[staticSession]] + [[stripOutputSort]]) is
   * shared with `PlanGateSpec` — the audit tool and the regression gates
@@ -61,9 +72,10 @@ object ExplainAudit {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors())
-    val iso = staticSession(graft.GraftSession.local(cpus = cpus))
+    val spark = graft.GraftSession.local(cpus = cpus)
+    val iso = staticSession(spark)
     iso.sparkContext.setLogLevel("ERROR")
-    if (args.length >= 4) dump(iso, sfDir, args(1), args(2),
+    if (args.length >= 4) dump(spark, iso, sfDir, args(1), args(2),
       args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     else audit(iso, sfDir, if (args.length > 1) args(1) else "")
     iso.stop()
@@ -84,14 +96,53 @@ object ExplainAudit {
         audited.explain("formatted")
       }
 
-  private def dump(iso: SparkSession, sfDir: String, outDir: String,
-                   suffix: String, names: Seq[String]): Unit = {
+  private def dump(spark: SparkSession, iso: SparkSession, sfDir: String,
+                   outDir: String, suffix: String, names: Seq[String]): Unit = {
     Files.createDirectories(Paths.get(outDir))
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        executed.add(funcName -> qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
     names.foreach { n =>
+      // executed pass first, so it runs what a query's first call in a
+      // JVM runs (scaffold builds included)
+      Shims.drainListeners(spark)
+      executed.clear()
+      SparkEntry.queries(n)(spark, sfDir).count()
+      Shims.drainListeners(spark)
+      val runs = Iterator.continually(executed.poll()).takeWhile(_ != null).toSeq
+        .map { case (f, p) => (f, finalPlan(p)) }
+      val summary = runs.map { case (f, p) => s"$f[${joins(p).mkString(",")}]" }
+      Files.writeString(Paths.get(outDir, s"${n}_${suffix}_executed.txt"),
+        (s"# joins: ${summary.mkString(" ")}" +: runs.zipWithIndex.map {
+          case ((f, p), i) => s"== ${i + 1} $f ==\n$p"
+        }).mkString("\n"))
       val txt = stripOutputSort(iso, SparkEntry.queries(n)(iso, sfDir))
         .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
       Files.writeString(Paths.get(outDir, s"${n}_$suffix.txt"), txt)
-      println(s"wrote $outDir/${n}_$suffix.txt")
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      println(s"wrote $outDir/${n}_$suffix.txt and ${n}_${suffix}_executed.txt")
     }
   }
+
+  /** AQE's final plan (the one that ran) in place of its wrapper. */
+  private def finalPlan(p: SparkPlan): SparkPlan = p match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan
+    case other => other
+  }
+
+  /** Join operators of an executed plan, inside query stages and
+    * subqueries too: BHJ broadcast hash, SMJ sort-merge, SHJ shuffled
+    * hash, BNLJ broadcast nested loop, CP cartesian product. */
+  private def joins(p: SparkPlan): Seq[String] = PlanWalk.collectWithSubqueries(p) {
+    case _: BroadcastHashJoinExec => "BHJ"
+    case _: SortMergeJoinExec => "SMJ"
+    case _: ShuffledHashJoinExec => "SHJ"
+    case _: BroadcastNestedLoopJoinExec => "BNLJ"
+    case _: CartesianProductExec => "CP"
+  }
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
 }

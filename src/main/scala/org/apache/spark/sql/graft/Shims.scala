@@ -41,6 +41,11 @@ object Shims {
     case _ => None
   }
 
+  /** Block until every event posted so far reached its listeners
+    * (QueryExecutionListener callbacks arrive on the listener bus). */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** `spark.sql.autoBroadcastJoinThreshold` in bytes; negative = never
     * broadcast by size. */
   def autoBroadcastThreshold(spark: SparkSession): Long =

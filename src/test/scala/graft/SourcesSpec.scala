@@ -532,14 +532,29 @@ class SourcesSpec extends SparkSpec {
     got.foreach(r => assert(r.getBoolean(0) == r.getBoolean(1), r.toString))
   }
 
+  /** The scaffold dirs `df` scans: every input file outside `corpusDir`
+    * must sit in a dir directly under the one [[graft.scale.Silver.root]]. */
+  private def scaffoldDirs(df: org.apache.spark.sql.DataFrame, corpusDir: String): Set[String] = {
+    val root = graft.scale.Silver.root.toFile.getCanonicalPath + "/"
+    val corpusCanon = new java.io.File(corpusDir).getCanonicalPath + "/"
+    val files = df.inputFiles.toSeq
+      .map(f => new java.io.File(new java.net.URI(f)).getCanonicalPath)
+      .filterNot(_.startsWith(corpusCanon))
+    assert(files.nonEmpty, "frame scans no scaffold files")
+    assert(files.forall(_.startsWith(root)),
+      s"scaffold files outside the root $root: ${files.mkString(", ")}")
+    files.map(f => root + f.stripPrefix(root).takeWhile(_ != '/')).toSet
+  }
+
   test("clubs-JSON scaffold cache: hit on same content, supersede keeps the " +
       "old dir readable for lazy pre-rewrite readers") {
-    // r13 ADVICE: Spark reads are lazy, so a DataFrame handed out before
-    // a corpus rewrite may still reference the superseded scaffold — it
-    // must stay READABLE until JVM exit (the shutdown hook deletes it),
-    // not be rmTree'd eagerly the moment a new content signature
-    // replaces it (r13's eager delete failed such callers mid-job).
+    // The clubs-JSON files are a Silver.scaffold of the nation table.
+    // Spark reads are lazy, so a DataFrame handed out before a corpus
+    // rewrite may still reference the superseded scaffold — it must stay
+    // READABLE until JVM exit (the root's exit hook deletes it), not be
+    // deleted the moment a new content signature replaces it.
     import java.nio.file.{Files, Paths, StandardCopyOption}
+    import graft.scale.Silver
     val corpus = Files.createTempDirectory("graft_cachetest")
     val srcNation = Paths.get(TestSpark.Sf0001, "nation.parquet")
     def copyNation(): Unit = {
@@ -555,31 +570,50 @@ class SourcesSpec extends SparkSpec {
         else Files.copy(p, t, StandardCopyOption.REPLACE_EXISTING)
       }
     }
-    def scaffoldDir(): String = {
-      val files = graft.sources.RoundTrip
-        .clubsJsonFromNations(spark, corpus.toString).inputFiles
-      assert(files.nonEmpty, "scaffold read produced no input files")
-      // .../graft_clubs_json<rand>/k=…/part-….txt → the temp root
-      val root = files.head.replaceFirst("^file:", "")
-      root.substring(0, root.indexOf("/", root.indexOf("graft_clubs_json")))
+    def clubsDir(): String = {
+      val ds = scaffoldDirs(graft.sources.RoundTrip
+        .clubsJsonFromNations(spark, corpus.toString), corpus.toString)
+      assert(ds.size == 1, ds.toString)
+      ds.head
     }
+    // the helper itself: one write per input content
+    var writes = 0
+    def probe(): String = Silver.scaffold(
+      corpus.resolve("nation.parquet").toString, "probe") { _ => writes += 1 }
     copyNation()
     // a LAZY frame captured before the rewrite — nothing has read it yet
     val preRewrite = graft.sources.RoundTrip
       .clubsJsonFromNations(spark, corpus.toString)
-    val d1 = scaffoldDir()
-    assert(scaffoldDir() == d1, "same content signature should cache-hit")
+    val d1 = clubsDir()
+    val p1 = probe()
+    assert(clubsDir() == d1, "same content signature should cache-hit")
+    assert(probe() == p1 && writes == 1, "same content should not rewrite")
     // rewrite the corpus: same bytes, bumped mtimes → new signature
     copyNation()
     Files.walk(corpus.resolve("nation.parquet")).forEach { p =>
       p.toFile.setLastModified(p.toFile.lastModified() + 10000); ()
     }
-    val d2 = scaffoldDir()
+    val d2 = clubsDir()
     assert(d2 != d1, "rewritten corpus must miss the cache")
-    assert(new java.io.File(d1).exists(),
+    assert(probe() != p1 && writes == 2, "rewritten input must rebuild")
+    assert(new java.io.File(d1).exists() && new java.io.File(p1).exists(),
       s"superseded scaffold dir deleted while lazy readers may hold it: $d1")
     // the pre-rewrite frame still evaluates against its old scaffold
     assert(preRewrite.count() > 0,
       "pre-rewrite lazy frame failed after its scaffold was superseded")
+  }
+
+  test("corpus scaffolds are shared by every session and kept under one temp root") {
+    // The files depend on the corpus content only, so a second session
+    // reads what the first one wrote — the blocking-audit tables were
+    // once rebuilt per session (and their dir never deleted).
+    val dir = TestSpark.Sf0001
+    val clubs = scaffoldDirs(graft.sources.RoundTrip.clubsJsonFromNations(spark, dir), dir)
+    assert(scaffoldDirs(graft.sources.RoundTrip
+      .clubsJsonFromNations(spark.newSession(), dir), dir) == clubs,
+      "clubs JSON rewritten for a second session")
+    val audit = scaffoldDirs(graft.scale.Dedup.blockingEvalQuery(spark, dir), dir)
+    assert(scaffoldDirs(graft.scale.Dedup.blockingEvalQuery(spark.newSession(), dir),
+      dir) == audit, s"audit tables rebuilt for a second session: $audit")
   }
 }

@@ -523,7 +523,7 @@ class StreamingSpec extends SparkSpec {
     // slice files must carry strictly increasing mtimes per slice
     // (back-to-back writes can otherwise tie on coarse-granularity
     // filesystems and replay out of order, silently dropping rows).
-    val sliceDir = StreamReplay.sliceDirFor(spark, TestSpark.Sf0001)
+    val sliceDir = StreamReplay.sliceDirFor(TestSpark.Sf0001)
       .getOrElse(fail("window replay left no cached slice dir"))
     val mtimes = (0 until StreamReplay.Slices).map { k =>
       val files = new java.io.File(s"$sliceDir/slice_$k").listFiles()
