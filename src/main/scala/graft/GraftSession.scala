@@ -15,6 +15,13 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session timezone: date/timestamp determinism across engines
   *  - shuffle partitions default to the local core count rather than
   *    200 — on a real cluster, size to ~2-3× total executor cores
+  *  - `spark.sql.codegen.cache.maxEntries=2000`: a daily cycle (parse,
+  *    validate, resolve, merge, analytics, two stream triggers) cycles
+  *    through about 260 generated classes, and Spark's default LRU cache
+  *    of 100 recompiled nearly all of them every pass; 2000 is about 7×
+  *    that working set. A STATIC conf: `CodeGenerator` sizes its cache
+  *    once, when the JVM first generates code, so the JVM's first
+  *    session decides it
   *
   * `Verify`, `Bench`, and the test harness all build through this.
   */
@@ -26,6 +33,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
 
   /** Local session sized to `cpus` threads (the shape Verify/Bench use). */
   def local(cpus: Int, ui: Boolean = false): SparkSession = {

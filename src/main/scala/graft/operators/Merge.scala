@@ -89,7 +89,9 @@ object Merge {
     *    the materialization observed, so it runs no job of its own (a
     *    count job only on the silver-dir path). Writing to `.next` also
     *    means the merge never overwrites its own input, so no second
-    *    materialization of the merged result is needed.
+    *    materialization of the merged result is needed. Under
+    *    `spark.graft.silver.dir` the batch's table is released
+    *    ([[graft.scale.Silver.release]]) once the swap is done.
     *  - Version ties break on a whole-row content hash, so the winner is
     *    a pure function of the row SET — invariant to partitioning,
     *    batch boundaries, and arrival order (max is associative and
@@ -141,23 +143,25 @@ object Merge {
     if (fs.exists(old)) fs.delete(old, true)
 
     val b = graft.scale.Silver.scratch(batch, "upsert_batch")
-    if (graft.scale.Silver.rows(b) == 0) return false
-    val current =
-      if (fs.exists(live)) spark.read.schema(batch.schema).parquet(tableDir)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-    val tiebreak = xxhash64(struct(b.columns.map(col): _*))
-    upsertLatestBy(current, b, keys.map(col), version.map(col) :+ tiebreak)
-      .write.mode("overwrite").parquet(next.toString)
-    // Engine-owned completeness marker: written AFTER the parquet job
-    // returns (so its presence proves the write finished), independent
-    // of committer config. Underscore-prefixed files are invisible to
-    // parquet readers, so it rides along through the rename into live.
-    fs.create(new org.apache.hadoop.fs.Path(next, CommitMarker), true).close()
-    if (fs.exists(live)) renameOrAbort(fs, live, old)
-    renameOrAbort(fs, next, live)
-    fs.delete(old, true)
-    true
+    try {
+      if (graft.scale.Silver.rows(b) == 0) return false
+      val current =
+        if (fs.exists(live)) spark.read.schema(batch.schema).parquet(tableDir)
+        else spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
+      val tiebreak = xxhash64(struct(b.columns.map(col): _*))
+      upsertLatestBy(current, b, keys.map(col), version.map(col) :+ tiebreak)
+        .write.mode("overwrite").parquet(next.toString)
+      // Engine-owned completeness marker: written AFTER the parquet job
+      // returns (so its presence proves the write finished), independent
+      // of committer config. Underscore-prefixed files are invisible to
+      // parquet readers, so it rides along through the rename into live.
+      fs.create(new org.apache.hadoop.fs.Path(next, CommitMarker), true).close()
+      if (fs.exists(live)) renameOrAbort(fs, live, old)
+      renameOrAbort(fs, next, live)
+      fs.delete(old, true)
+      true
+    } finally graft.scale.Silver.release(b)
   }
 
   /** Shared scaffold for key-matched full-outer merges: align the two

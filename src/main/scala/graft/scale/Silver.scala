@@ -62,6 +62,26 @@ object Silver {
   def scratch(df: DataFrame, prefix: String): DataFrame =
     materialize(df, s"${prefix}_${java.util.UUID.randomUUID().toString.take(8)}")
 
+  /** Delete the silver table behind a [[scratch]] frame once its caller
+    * is done with it: under `spark.graft.silver.dir` every call leaves a
+    * `prefix_<uuid8>` table that nothing else removes. A no-op on the
+    * local path (a checkpoint leaf has no table), and for a frame that
+    * does not read a table directly under the silver dir. */
+  def release(df: DataFrame): Unit =
+    df.sparkSession.conf.getOption("spark.graft.silver.dir").foreach { dir =>
+      val conf = df.sparkSession.sparkContext.hadoopConfiguration
+      val silver = new org.apache.hadoop.fs.Path(dir)
+      val fs = silver.getFileSystem(conf)
+      val parent = fs.makeQualified(silver)
+      df.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+      }.collect {
+        case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+          h.location.rootPaths
+      }.flatten.filter(p => fs.makeQualified(p).getParent == parent)
+        .foreach(fs.delete(_, true))
+    }
+
   /** Row count of `df`: free for a [[materialize]]d checkpoint leaf,
     * whose job counted it; a count job otherwise. */
   def rows(df: DataFrame): Long =

@@ -4,11 +4,12 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.graft.Shims
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkEntry
 
@@ -28,9 +29,10 @@ import graft.SparkEntry
   *    evidence the optimization rounds commit under `plans/`. The static
   *    plan shows neither the jobs a [[graft.scale.Silver.materialize]]
   *    runs while the query is built nor AQE's run-time changes; the
-  *    executed file lists every action (materializations, count jobs,
-  *    the final count) with its final plan, headed by a one-line join
-  *    summary that diffs cleanly.
+  *    executed file lists every action of every session (materializations,
+  *    count jobs, stream micro-batches in a cloned session, the final
+  *    count) with its final plan, headed by a one-line join summary that
+  *    diffs cleanly.
   *
   * The static-plan VIEW ([[staticSession]] + [[stripOutputSort]]) is
   * shared with `PlanGateSpec` — the audit tool and the regression gates
@@ -100,10 +102,14 @@ object ExplainAudit {
                    outDir: String, suffix: String, names: Seq[String]): Unit = {
     Files.createDirectories(Paths.get(outDir))
     val executed = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
-    spark.listenerManager.register(new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        executed.add(funcName -> qe.executedPlan)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    // one listener on the context hears every session's executions,
+    // including micro-batches in a stream's cloned session
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case end: SparkListenerSQLExecutionEnd =>
+          Shims.executed(end).foreach { case (f, qe) => executed.add(f -> qe.executedPlan) }
+        case _ =>
+      }
     })
     names.foreach { n =>
       // executed pass first, so it runs what a query's first call in a

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.graft.Shims
 
 import graft.SparkEntry
 
@@ -15,6 +16,10 @@ import graft.SparkEntry
   * order: each job is filed under the rep named by its job description,
   * each stage under the job whose `stageIds` listed it first, and the
   * report prints after `stop()` has drained the listener bus.
+  *
+  * Each rep line also carries the rep's codegen compile time and the
+  * number of classes Janino compiled (generated-class cache misses): 0
+  * after the first rep means the query's working set stays cached.
   *
   * Usage: runMain graft.tools.ProfileQuery <sfDir> <q_a,q_b,...> [reps]
   * (cpus via SPARK_GRAFT_CPUS, default all cores).
@@ -70,23 +75,27 @@ object ProfileQuery {
     val walls = for (n <- names.toSeq; r <- 1 to reps) yield {
       val rep = s"$n rep$r"
       spark.sparkContext.setJobDescription(rep)
+      val (c0, k0) = (Shims.codegenCompileNs, Shims.codegenClassesCompiled)
       val w0 = System.currentTimeMillis()
       SparkEntry.queries(n)(spark, sfDir).count()
       val wall = System.currentTimeMillis() - w0
+      val compile = (Shims.codegenCompileNs - c0) / 1e6
+      val classes = Shims.codegenClassesCompiled - k0
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      rep -> wall
+      (rep, wall, compile, classes)
     }
     spark.stop() // drains the listener bus: every event below has arrived
 
     import scala.jdk.CollectionConverters._
     val byRep = jobs.values.asScala.toSeq.groupBy(_.rep)
-    walls.foreach { case (rep, wallMs) =>
+    walls.foreach { case (rep, wallMs, compileMs, classes) =>
       // per-job segments in start order, plus inter-job driver gaps
       val js = byRep.getOrElse(rep, Nil).sortBy(_.id)
       val wall = wallMs / 1e3
       val jobSum = js.map(j => (j.t1 - j.t0) / 1e3).sum
       println(f"== $rep wall=$wall%.3f s, ${js.size} jobs " +
-        f"(sum ${jobSum}%.3f s, driver gaps ${wall - jobSum}%.3f s)")
+        f"(sum ${jobSum}%.3f s, driver gaps ${wall - jobSum}%.3f s), " +
+        f"codegen compile $compileMs%.1f ms, $classes classes")
       var prevEnd = 0L
       js.foreach { j =>
         val gap = if (prevEnd == 0L) 0.0 else (j.t0 - prevEnd) / 1e3

@@ -46,6 +46,25 @@ object Shims {
   def drainListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** The query a finished SQL execution ran, with the name of the action
+    * that ran it, if it succeeded. The event carries its
+    * `QueryExecution` for every session of the context, including a
+    * stream's `newSession()` clones that a per-session
+    * `QueryExecutionListener` never hears from. */
+  def executed(e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd)
+      : Option[(String, org.apache.spark.sql.execution.QueryExecution)] =
+    Option(e.qe).filter(_ => e.executionFailure.isEmpty)
+      .map(qe => e.executionName.getOrElse("execution") -> qe)
+
+  /** The JVM's cumulative Janino compile time, in nanoseconds. */
+  def codegenCompileNs: Long =
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime
+
+  /** Classes Janino has compiled in this JVM (cache misses of the
+    * generated-class cache). */
+  def codegenClassesCompiled: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** `spark.sql.autoBroadcastJoinThreshold` in bytes; negative = never
     * broadcast by size. */
   def autoBroadcastThreshold(spark: SparkSession): Long =

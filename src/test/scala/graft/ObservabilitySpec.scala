@@ -50,6 +50,18 @@ class ObservabilitySpec extends SparkSpec {
       assert(r.status == "ok", s"stage ${r.stage} failed: ${r.error}")
       assert(r.items > 0L, s"stage ${r.stage} produced no rows")
     }
+    // the model stage fits and scores from its materialized features;
+    // the scores must be exactly those of the same pipeline fitted on
+    // the unmaterialized aggregate
+    import graft.apps.DailyAnalytics
+    def scored(feats: org.apache.spark.sql.DataFrame) =
+      DailyAnalytics.scoreHeldOut(feats).select("o_custkey", "prediction")
+        .collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+    val feats = DailyAnalytics.customerFeatures(spark, TestSpark.Sf0001)
+    val fromLeaf = scored(graft.scale.Silver.scratch(feats, "model_features"))
+    assert(fromLeaf.size.toLong == results.head.items)
+    assert(fromLeaf == scored(feats),
+      "scores from the materialized features differ from the unmaterialized fit")
   }
 
   test("HealthCheck: healthy on the corpus, unhealthy on a missing dir") {

@@ -30,6 +30,33 @@ class SilverSpec extends SparkSpec {
     assert(new java.io.File(s"$tmp/named_table").isDirectory)
   }
 
+  test("release: upserts and the model stage leave no scratch table in the silver dir") {
+    import java.nio.file.{Files, Path}
+    val s2 = spark.newSession()
+    val silver = Files.createTempDirectory("graft_silver_release").toString
+    s2.conf.set("spark.graft.silver.dir", silver)
+    val in = Files.createTempDirectory("graft_release_in").toString
+    val state = Files.createTempDirectory("graft_release_tbl").toString + "/state"
+    val ckpt = Files.createTempDirectory("graft_release_ckpt").toString
+    (1 to 3).foreach { i =>
+      Files.writeString(Path.of(in, s"snap$i.json"),
+        s"""{"home_team":"A","away_team":"B","score_text":"$i-0","status_text":"FT",""" +
+          s""""match_time":"90","source":"flash","scraped_at":"2024-01-0${i}T20:00:00.000Z"}""")
+      val q = graft.streaming.LiveScores.runOnce(s2, in, state, ckpt)
+      q.awaitTermination(120000)
+      q.exception.foreach(e => throw e)
+    }
+    assert(s2.read.parquet(state).head().getAs[Int]("home_score") == 3)
+    val stages = graft.apps.DailyAnalytics.run(s2, TestSpark.Sf0001)
+    assert(stages.forall(_.status == "ok"), stages.mkString("; "))
+    val left = new java.io.File(silver).list().toSeq
+      .filter(n => n.startsWith("upsert_batch_") || n.startsWith("model_features_"))
+    assert(left.isEmpty, s"scratch tables left in the silver dir: $left")
+    // a frame that does not read a scratch table is never deleted
+    Silver.release(s2.read.parquet(state))
+    assert(new java.io.File(state).isDirectory)
+  }
+
   test("materialize: the local leaf carries its observed size; the planner broadcasts it") {
     import org.apache.spark.sql.functions._
     // AQE off: the statically planned join is the planner's own choice
