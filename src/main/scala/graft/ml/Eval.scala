@@ -152,7 +152,7 @@ object Eval {
     def rankedTop(ord: String): DataFrame = {
       val top = per.orderBy(col(ord).desc, col("custkey").asc).limit(k)
       val b = top.select(col(ord).as("bo"), col("custkey").as("bc"))
-      top.join(broadcast(b),
+      top.join(b,
           col("bo") > col(ord) ||
             (col("bo") === col(ord) && col("bc") < col("custkey")), "left")
         .groupBy(col("custkey"), col("rel"))
@@ -170,7 +170,7 @@ object Eval {
         .select("custkey"), Seq("custkey"), "left_semi")
       .agg(count(lit(1)).as("n_hits"))
     def dd(c: Column): Column = c.cast("string").cast("double")
-    dcg.crossJoin(broadcast(idcg)).crossJoin(broadcast(hits))
+    dcg.crossJoin(idcg).crossJoin(hits)
       .select((dd(col("dcg_w")) / lit(1e16)).as("dcg"),
         (dd(col("idcg_w")) / lit(1e16)).as("idcg"),
         (dd(col("dcg_w")) / dd(col("idcg_w"))).as("ndcg"), col("n_hits"))
@@ -258,7 +258,7 @@ object Eval {
     val cand = spine.join(broadcast(byDecile), col("decile") <= col("d"))
       .groupBy("d")
       .agg(sum(col("n")).as("n_left"), sum(col("pos")).as("pos_left"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("d"), col("n_left"), col("pos_left"),
         (col("nn") - col("n_left")).as("n_right"),
         (col("pp") - col("pos_left")).as("pos_right"))
@@ -273,7 +273,7 @@ object Eval {
           col("n_right").cast("double"))
     val best = cand.agg(max(struct(col("score"), (-col("d")).as("nd")))
       .as("m")).select((-col("m.nd")).as("bd"))
-    cand.crossJoin(broadcast(best))
+    cand.crossJoin(best)
       .select(col("d"), col("n_left"), col("pos_left"), col("n_right"),
         col("pos_right"), col("score"), (col("d") === col("bd")).as("is_best"))
       .orderBy("d")
@@ -302,7 +302,7 @@ object Eval {
     ranked.filter(col("k") <= topK) // bounded: 50 rows from here on
       .select(col("k"), col("y"))
       .withColumn("tp", sum(col("y")).over(w))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("k"), col("tp"),
         (col("tp").cast("double") / col("k").cast("double")).as("precision"),
         (col("tp").cast("double") / col("n_pos").cast("double")).as("recall"),
@@ -413,7 +413,7 @@ object Eval {
     val d38 = "decimal(38,0)"
     val scored = scoredLabels(spark, dir)
     val tot = scored.agg(count(lit(1)).as("n"), sum(col("v")).as("s"))
-    val cells = scored.crossJoin(broadcast(tot))
+    val cells = scored.crossJoin(tot)
       .withColumn("pred",
         when(col("n").cast(d38) * col("v").cast(d38) >= col("s").cast(d38),
           1L).otherwise(0L))

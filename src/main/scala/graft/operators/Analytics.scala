@@ -706,7 +706,7 @@ object Analytics {
     pairs
       .join(pc.select(col("p").as("p1"), col("c").as("c1")), "p1")
       .join(pc.select(col("p").as("p2"), col("c").as("c2")), "p2")
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
       .withColumn("lift",
         (col("c_ab") * col("n_orders")).cast("double") /
           (col("c1") * col("c2")).cast("double"))
@@ -736,7 +736,7 @@ object Analytics {
         (col("l_extendedprice").cast("decimal(18,2)") * 100)
           .cast("long").as("cents"))
     val bounds = li.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-    val perHalf = li.crossJoin(broadcast(bounds))
+    val perHalf = li.crossJoin(bounds)
       .withColumn("half",
         when(col("day") * 2 <= col("d0") + col("d1"), lit(0L)).otherwise(1L))
       .groupBy("p", "half")
@@ -831,7 +831,7 @@ object Analytics {
     val tot = perPart.agg(count(lit(1)).as("n_parts"))
     perPart.groupBy("n_suppliers")
       .agg(count(lit(1)).as("n_parts_bucket"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .withColumn("share",
         col("n_parts_bucket").cast("double") / col("n_parts").cast("double"))
       .withColumn("at_risk", col("n_suppliers") === 1L)
@@ -866,7 +866,7 @@ object Analytics {
         Seq(col("c_ab").desc, col("rec").asc))
       .join(pc.select(col("p").as("src"), col("c").as("c_src")), "src")
       .join(pc.select(col("p").as("rec"), col("c").as("c_rec")), "rec")
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
     val w = Window.partitionBy(col("src"))
       .orderBy(col("c_ab").desc, col("rec").asc)
     top
@@ -894,7 +894,7 @@ object Analytics {
         col("o_totalprice").cast("decimal(18,2)").as("p"))
     val bounds = o.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
     val halves = graft.scale.Silver.scratch(
-      o.crossJoin(broadcast(bounds))
+      o.crossJoin(bounds)
         .withColumn("half",
           when(col("day") * 2 <= col("d0") + col("d1"), lit("h1"))
             .otherwise(lit("h2")))
@@ -1025,7 +1025,7 @@ object Analytics {
       sum(col("decile_cents")).as("tot_cents"))
     Ranking.distributedCumSum(byDecile, Seq(col("decile").asc),
         Seq("n_customers", "decile_cents"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("decile"), col("n_customers"), col("decile_cents"),
         col("cum_decile_cents").as("cum_cents"),
         (col("cum_decile_cents").cast("double") /
@@ -1096,7 +1096,7 @@ object Analytics {
       .filter(col("digit") =!= "0")
       .groupBy("digit").agg(count(lit(1)).as("cnt"))
     val total = digits.agg(sum(col("cnt")).as("total"))
-    digits.crossJoin(broadcast(total))
+    digits.crossJoin(total)
       .withColumn("share", col("cnt").cast("double") / col("total"))
       .select("digit", "cnt", "share")
       .orderBy("digit")
@@ -1123,10 +1123,10 @@ object Analytics {
       .filter(col("digit") =!= "0")
       .groupBy("digit").agg(count(lit(1)).as("obs"))
     val total = digits.agg(sum(col("obs")).as("total"))
-    broadcast(benford)
+    benford
       .join(digits, Seq("digit"), "left")
       .na.fill(0L, Seq("obs"))
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .withColumn("expect", col("total").cast("double") * col("p"))
       .withColumn("chi2_term",
         (col("obs").cast("double") - col("expect")) *
@@ -1154,7 +1154,7 @@ object Analytics {
     val totals = ranked.agg(count(lit(1)).as("n"), sum(col("v")).as("total"))
     val cuts = spark.createDataFrame(pcts.map(p => Tuple1(p.toLong)))
       .toDF("pct")
-    ranked.crossJoin(broadcast(totals)).crossJoin(broadcast(cuts))
+    ranked.crossJoin(totals).crossJoin(cuts)
       .withColumn("k", expr("(pct * n + 99) div 100")) // ⌈p·n/100⌉ exact
       .groupBy("pct")
       .agg(first(col("k")).as("top_k"),
@@ -1232,7 +1232,7 @@ object Analytics {
     val cum = Ranking.distributedCumSum(rev,
       Seq(col("v").desc, col("l_partkey").asc), Seq("v"))
     val tot = rev.agg(sum(col("v")).as("total"))
-    cum.crossJoin(broadcast(tot))
+    cum.crossJoin(tot)
       .withColumn("cls",
         when(col("cum_v").cast(d38) * 100 <= col("total").cast(d38) * 80, "A")
           .when(col("cum_v").cast(d38) * 100 <= col("total").cast(d38) * 95, "B")
@@ -1365,7 +1365,7 @@ object Analytics {
     // one pass for both one-row totals (was two separate aggregations)
     val tot = rev.agg(sum(col("v")).as("total"),
       count(lit(1)).as("n_parts_total"))
-    val abc = cum.crossJoin(broadcast(tot))
+    val abc = cum.crossJoin(tot)
       .select(col("l_partkey"),
         when(col("cum_v").cast(d38) * 100 <= col("total").cast(d38) * 80, "A")
           .when(col("cum_v").cast(d38) * 100 <= col("total").cast(d38) * 95,
@@ -1383,7 +1383,7 @@ object Analytics {
           .otherwise("Z").as("xyz"))
     abc.join(xyz, Seq("l_partkey"))
       .groupBy("abc", "xyz").agg(count(lit(1)).as("n_parts"))
-      .crossJoin(broadcast(tot.select(col("n_parts_total"))))
+      .crossJoin(tot.select(col("n_parts_total")))
       .select(col("abc"), col("xyz"), col("n_parts"),
         (col("n_parts").cast("double") / col("n_parts_total").cast("double"))
           .as("part_share"))
@@ -1488,7 +1488,7 @@ object Analytics {
       .agg(count(lit(1)).as("n_parts"),
         sum(col("sq")).as("total_units"),
         sum(col("n")).as("total_weeks"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("cls"), col("n_parts"), col("total_units"),
         col("total_weeks"),
         (col("n_parts").cast("double") / col("n_parts_total").cast("double"))

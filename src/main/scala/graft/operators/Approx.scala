@@ -75,7 +75,7 @@ object Approx {
     // count, for callers that can derive it without re-materializing the
     // item rows (e.g. sum-of-array-sizes instead of a second explode).
     val total = totalHint.getOrElse(items.agg(count(lit(1)).as("total")))
-    counted.crossJoin(broadcast(total))
+    counted.crossJoin(total)
       .filter(col("cnt").cast("double") > lit(support) * col("total").cast("double"))
       .select(col("item"), col("cnt"))
   }
@@ -136,7 +136,7 @@ object Approx {
     def holds(p: Int) = // bucket containing the p-th percentile row
       col("cum") * 100 >= col("total") * p &&
         (col("cum") - col("cnt")) * 100 < col("total") * p
-    cum.crossJoin(broadcast(tot))
+    cum.crossJoin(tot)
       .withColumn("lo",
         expr("shiftleft(cast(1 as bigint), cast(bucket as int) - 1)"))
       .withColumn("is_p50", holds(50))
@@ -228,7 +228,7 @@ object Approx {
     val kth = bottomK.agg(max(col("h")).as("h_k"), count(lit(1)).as("k_got"))
     val truth = graft.sources.Tables.orders(spark, dir)
       .agg(countDistinct(col("o_orderkey")).as("true_distinct"))
-    kth.crossJoin(broadcast(truth))
+    kth.crossJoin(truth)
       .withColumn("est", (col("k_got").cast("double") - lit(1.0)) / col("h_k"))
       .withColumn("rel_err",
         (col("est") - col("true_distinct").cast("double")) /
@@ -272,9 +272,9 @@ object Approx {
       .orderBy(col("h").asc, col("fp").asc).limit(k)
     val truth = hashed.select("fp").distinct()
       .agg(count(lit(1)).as("true_union"))
-    est(merged, "union").crossJoin(broadcast(est(skA, "a")))
-      .crossJoin(broadcast(est(skB, "b")))
-      .crossJoin(broadcast(truth))
+    est(merged, "union").crossJoin(est(skA, "a"))
+      .crossJoin(est(skB, "b"))
+      .crossJoin(truth)
       .select(col("k_union"), col("est_a"), col("est_b"), col("est_union"),
         col("true_union"),
         ((col("est_union") - col("true_union").cast("double")) /
@@ -322,7 +322,7 @@ object Approx {
         .as("s_scaled"))
     val truth = graft.sources.Tables.orders(spark, dir)
       .agg(countDistinct(col("o_orderkey")).as("true_distinct"))
-    agg.crossJoin(broadcast(truth))
+    agg.crossJoin(truth)
       .withColumn("est",
         lit(HllAlpha64) * lit(4096.0) * lit(36028797018963968.0) /
           col("s_scaled").cast("double"))
@@ -355,7 +355,7 @@ object Approx {
     // per-source histograms (the mergeable summaries), then the merge
     val perSource = graft.sources.Tables.documents(spark, dir)
       .select(col("source"), col("n_chars"))
-      .crossJoin(broadcast(bounds))
+      .crossJoin(bounds)
       .select(col("source"),
         expr(s"((n_chars - lo) * $bins) div (hi - lo + 1)").as("bin"))
       .groupBy("source", "bin").agg(count(lit(1)).as("cnt"))
@@ -365,7 +365,7 @@ object Approx {
       .join(broadcast(merged.select(col("bin").as("b2"), col("cnt").as("c2"))),
         col("b2") <= col("bin"))
       .groupBy(col("bin"), col("cnt")).agg(sum(col("c2")).as("cum"))
-    val medBin = cum.crossJoin(broadcast(n))
+    val medBin = cum.crossJoin(n)
       .filter(col("cum") >= expr("(n + 1) div 2"))
       .agg(min(struct(col("bin"), col("cnt").as("c"))).as("m"))
       .select(col("m.bin").as("med_bin"), col("m.c").as("bin_count"))
@@ -374,7 +374,7 @@ object Approx {
         rankCol = "rk", nCol = "__n")
       .filter(col("rk") === expr("(__n + 1) div 2"))
       .select(col("n_chars").as("exact_median"), col("__n").as("n"))
-    exact.crossJoin(broadcast(medBin)).crossJoin(broadcast(bounds))
+    exact.crossJoin(medBin).crossJoin(bounds)
       .select(col("n"), expr("(n + 1) div 2").as("k"), col("med_bin"),
         col("bin_count"), col("exact_median"),
         (expr(s"((exact_median - lo) * $bins) div (hi - lo + 1)") ===

@@ -105,7 +105,7 @@ object Distribution {
     val ct = cells.groupBy("priority").agg(sum(col("obs")).as("ct"))
     val n = cells.agg(sum(col("obs")).as("n"))
     cells.join(broadcast(rt), "segment").join(broadcast(ct), "priority")
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
       .withColumn("expect", (col("rt") * col("ct")).cast("double") /
         col("n").cast("double"))
       .withColumn("chi2_term",
@@ -416,7 +416,7 @@ object Distribution {
           .as("day"),
         cents(col("o_totalprice")).as("v"))
     val bounds = o.agg(expr("(min(day) + max(day)) div 2").as("mid"))
-    val tagged = o.crossJoin(broadcast(bounds))
+    val tagged = o.crossJoin(bounds)
       .withColumn("h2", col("day") > col("mid"))
     val perSeg = tagged.groupBy("segment")
       .agg(sum(when(!col("h2"), col("v")).otherwise(0L)).as("s1"),
@@ -426,7 +426,7 @@ object Distribution {
     val overall = perSeg.agg(
       (sum(col("s2")).cast(d38) * sum(col("n1")).cast(d38) >
         sum(col("s1")).cast(d38) * sum(col("n2")).cast(d38)).as("overall_up"))
-    perSeg.crossJoin(broadcast(overall))
+    perSeg.crossJoin(overall)
       .withColumn("seg_up",
         col("s2").cast(d38) * col("n1").cast(d38) >
           col("s1").cast(d38) * col("n2").cast(d38))
@@ -458,7 +458,7 @@ object Distribution {
         cents(col("o_totalprice")).as("v"))
     val bounds = o.agg(expr("(min(day) + max(day)) div 2").as("mid"))
     val tagged = graft.scale.Silver.scratch(
-      o.crossJoin(broadcast(bounds))
+      o.crossJoin(bounds)
         .select(col("v"), (col("day") <= col("mid")).as("is_ref")),
       "drift_tagged") // feeds the threshold pass and both codings
     val refPer = tagged.filter(col("is_ref"))
@@ -476,7 +476,7 @@ object Distribution {
     val bucket = (1 until buckets).map { i =>
       when(col("v") > col(s"t$i"), 1).otherwise(0)
     }.reduceLeft(_ + _) + 1
-    val counts = tagged.crossJoin(broadcast(thresholds))
+    val counts = tagged.crossJoin(thresholds)
       .select(bucket.cast("long").as("bucket"), col("is_ref"))
       .groupBy("bucket")
       .agg(sum(when(col("is_ref"), 1L).otherwise(0L)).as("n_ref"),
@@ -486,7 +486,7 @@ object Distribution {
     val spine = (1 to buckets).map(_.toLong).toDF("bucket")
     spine.join(counts, Seq("bucket"), "left")
       .na.fill(0L, Seq("n_ref", "n_cur"))
-      .crossJoin(broadcast(totals))
+      .crossJoin(totals)
       .withColumn("ref_share",
         col("n_ref").cast("double") / col("tot_ref").cast("double"))
       .withColumn("cur_share",
@@ -615,7 +615,7 @@ object Distribution {
         .agg(count(lit(1)).as("c")),
       "ipf_cells") // feeds the total AND round 0
     val n = cells.agg(sum(col("c")).as("n"))
-    var w = graft.scale.Silver.scratch(cells.crossJoin(broadcast(n))
+    var w = graft.scale.Silver.scratch(cells.crossJoin(n)
       .withColumn("tgt", expr("(n * 1000000) div 5"))
       .select(col("segment"), col("prio"), col("c"), col("tgt"),
         (col("c") * lit(1000000L)).as("w")), "ipf_w")
@@ -658,7 +658,7 @@ object Distribution {
           .as("day"),
         (col("c_mktsegment") === treated).as("is_t"))
     val bounds = o.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-    val cells = o.crossJoin(broadcast(bounds))
+    val cells = o.crossJoin(bounds)
       .withColumn("is_post", col("day") * 2 > col("d0") + col("d1"))
       .agg(
         sum(when(col("is_t") && !col("is_post"), 1L).otherwise(0L)).as("n_tpre"),
@@ -767,7 +767,7 @@ object Distribution {
       .when(u < lit(c2), 2L).when(u < lit(c3), 3L).otherwise(4L)
     Tables.orders(spark, dir)
       .select(col("o_orderkey"), cents(col("o_totalprice")).as("v"))
-      .crossJoin(broadcast(spine))
+      .crossJoin(spine)
       .select(col("b"), w.as("w"), col("v"))
       .groupBy("b")
       .agg(sum(col("w")).as("n_eff"),
@@ -845,7 +845,7 @@ object Distribution {
     val n = cells.agg(sum(col("obs")).as("n"))
     val terms = cells.join(broadcast(rt), "segment")
       .join(broadcast(ct), "priority")
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
       .withColumn("dev",
         (col("n").cast(d38) * col("obs") - col("rt").cast(d38) * col("ct"))
           .cast("double"))
@@ -858,8 +858,8 @@ object Distribution {
     // (a double countDistinct in one agg would plan an Expand).
     val r = cells.select("segment").distinct().agg(count(lit(1)).as("r"))
     val c = cells.select("priority").distinct().agg(count(lit(1)).as("c"))
-    n.crossJoin(broadcast(chi2)).crossJoin(broadcast(r))
-      .crossJoin(broadcast(c))
+    n.crossJoin(chi2).crossJoin(r)
+      .crossJoin(c)
       .select(col("n"), col("r"), col("c"), col("chi2_e9"),
         sqrt(col("chi2_e9").cast("double") / lit(1.0e9) /
           (col("n").cast("double") *
@@ -1085,7 +1085,7 @@ object Distribution {
         sum(when(col("o_orderdate") >= to_date(lit("1998-01-01")), 1L)
           .otherwise(0L)).as("b"))
     val tot = cells.agg(sum(col("a")).as("ta"), sum(col("b")).as("tb"))
-    cells.crossJoin(broadcast(tot))
+    cells.crossJoin(tot)
       .select(col("priority"), col("a"), col("b"),
         abs(col("a").cast(d38) * col("tb").cast(d38) -
           col("b").cast(d38) * col("ta").cast(d38)).as("w"),
@@ -1336,7 +1336,7 @@ object Distribution {
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("s"))
     val tot = per.agg(sum(col("n_docs")).as("tn"), sum(col("s")).as("ts"))
-    per.crossJoin(broadcast(tot))
+    per.crossJoin(tot)
       .select(col("source"), col("n_docs"),
         (col("s").cast("double") / col("n_docs").cast("double"))
           .as("own_mean"),
@@ -1445,7 +1445,7 @@ object Distribution {
       .withColumn("w", floor(col("n").cast("double") * col("sigma"))
         .cast("long"))
     val tot = per.agg(sum(col("w")).as("tw"), sum(col("n")).as("tn"))
-    per.crossJoin(broadcast(tot))
+    per.crossJoin(tot)
       .select(col("segment"), col("n"), col("sigma"),
         col("w"),
         expr(s"($budget * w) div tw").as("n_neyman"),
@@ -1499,7 +1499,7 @@ object Distribution {
         sum(when(col("l_returnflag") =!= "R", 1L).otherwise(0L)).as("b"))
     val tot = cells.agg(sum(col("a")).as("c1"), sum(col("b")).as("c0"),
       count(lit(1)).as("m"))
-    val stats = cells.crossJoin(broadcast(tot))
+    val stats = cells.crossJoin(tot)
       .select(col("brand"), col("a"), col("b"), col("m"),
         (col("c1") - col("a")).as("c"), (col("c0") - col("b")).as("d"),
         col("c1"), col("c0"))
@@ -1755,7 +1755,7 @@ object Distribution {
     val medOf = (2L to 5L).foldLeft(when(col("g") === 1L, col("med1"))) {
       case (acc, g) => acc.when(col("g") === g, col(s"med$g"))
     }
-    val z = rows.crossJoin(broadcast(med))
+    val z = rows.crossJoin(med)
       .select(col("g"), abs(col("v") - medOf).as("z"))
     val aggs = Seq(count(lit(1)).as("n"),
       sum(col("z").cast(d38)).as("s"),
@@ -1764,7 +1764,7 @@ object Distribution {
         sum(when(col("g") === g, 1L).otherwise(0L)).as(s"zn$g"),
         sum(when(col("g") === g, col("z").cast(d38))
           .otherwise(lit(0).cast(d38))).as(s"zs$g")))
-    val wide = z.agg(aggs.head, aggs.tail: _*).crossJoin(broadcast(med))
+    val wide = z.agg(aggs.head, aggs.tail: _*).crossJoin(med)
     val inner = (1L to 5L).map { g =>
       (col(s"zs$g") * col(s"zs$g")).cast("string").cast("double") /
         col(s"zn$g").cast("double")
@@ -1823,7 +1823,7 @@ object Distribution {
       col("sg").as("s1"))
     val b = groups.select(col("g").as("g2"), col("ng").as("n2"),
       col("sg").as("s2"))
-    a.join(b, col("g1") < col("g2")).crossJoin(broadcast(msw))
+    a.join(b, col("g1") < col("g2")).crossJoin(msw)
       .select(col("g1"), col("g2"),
         ((col("s1") * col("n2").cast(d38) - col("s2") * col("n1").cast(d38))
           .cast("string").cast("double") /
@@ -2010,7 +2010,7 @@ object Distribution {
         (col("n").cast(d38) * col("syy") -
           col("sy").cast(d38) * col("sy").cast(d38)).as("cyy"),
         col("sx"), col("sy"))
-    per.crossJoin(broadcast(m))
+    per.crossJoin(m)
       .select(col("l_orderkey"), col("x").as("x_cents"),
         col("y").as("n_lines"),
         (col("n").cast(d38) * col("x").cast(d38) - col("sx").cast(d38))
@@ -2097,7 +2097,7 @@ object Distribution {
       sum(when(col("qa") > col("qb"), col("w")).otherwise(0L)).as("n_gt"),
       sum(when(col("qa") < col("qb"), col("w")).otherwise(0L)).as("n_lt"))
     val ns = counts.agg(sum(col("cr")).as("n_r"), sum(col("cn")).as("n_n"))
-    ns.crossJoin(broadcast(gtlt))
+    ns.crossJoin(gtlt)
       .select(col("n_r"), col("n_n"), col("n_gt"), col("n_lt"),
         ((col("n_gt") - col("n_lt")).cast("double") /
           (col("n_r") * col("n_n")).cast("double")).as("cliffs_delta"))
@@ -2125,12 +2125,12 @@ object Distribution {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = diffs.withColumn("cum", sum(col("w")).over(wd))
     val tot = diffs.agg(sum(col("w")).as("t_pairs"))
-    val ranked = cum.crossJoin(broadcast(tot))
+    val ranked = cum.crossJoin(tot)
     val lo = ranked.filter(col("cum") >= expr("(t_pairs + 1) div 2"))
       .agg(min(col("d")).as("hl_lo"))
     val hi = ranked.filter(col("cum") >= expr("t_pairs div 2 + 1"))
       .agg(min(col("d")).as("hl_hi"))
-    tot.crossJoin(broadcast(lo)).crossJoin(broadcast(hi))
+    tot.crossJoin(lo).crossJoin(hi)
       .select(col("t_pairs"), col("hl_lo"), col("hl_hi"),
         ((col("hl_lo") + col("hl_hi")).cast("double") / lit(2.0))
           .as("hl_shift"))
@@ -2217,7 +2217,7 @@ object Distribution {
       sum(col("w_w") * col("e_w")).as("swe"))
       .select((col("swe").cast("double") / col("sw").cast("double"))
         .as("pooled_effect_cents"))
-    scaled.crossJoin(broadcast(pooled))
+    scaled.crossJoin(pooled)
       .select(col("segment"), col("nt").as("n_t"), col("nc").as("n_c"),
         col("effect_cents"), col("var_effect"), col("pooled_effect_cents"),
         (col("w_w").cast("double") / lit(1e15) *
@@ -2285,7 +2285,7 @@ object Distribution {
       (lit(2.0) * qa)
     val vInv = lit(1.0) / eA + lit(1.0) / (m1 - eA) +
       lit(1.0) / (n1 - eA) + lit(1.0) / (nD - m1 - n1 + eA)
-    cells.crossJoin(broadcast(or))
+    cells.crossJoin(or)
       .select(col("segment"), col("a"), col("b"), col("c"), col("d"),
         col("or_mh"), eA.as("e_a"),
         ((col("a").cast("double") - eA) * (col("a").cast("double") - eA) *
@@ -2323,7 +2323,7 @@ object Distribution {
     val ty = cells.groupBy("y")
       .agg(sum(col("n")).as("ty"), sum(col("n") * col("n")).as("tyy"))
       .agg(sum(expr("(ty * ty - tyy) div 2")).as("t_y"))
-    cd.crossJoin(broadcast(ty))
+    cd.crossJoin(ty)
       .select(col("c").as("n_concordant"), col("d").as("n_discordant"),
         col("t_y").as("n_tied_y"),
         ((col("c") - col("d")).cast("double") /
@@ -2385,7 +2385,7 @@ object Distribution {
     val pairSum = seg.as("a").crossJoin(broadcast(seg.as("b")))
       .agg(sum(abs(col("a.s").cast(d38) * col("b.n").cast(d38) -
         col("b.s").cast(d38) * col("a.n").cast(d38))).as("psum"))
-    tot.crossJoin(broadcast(pairSum))
+    tot.crossJoin(pairSum)
       .select(col("n_segments"), col("nt").as("n"),
         (col("psum").cast("string").cast("double") /
           (lit(2.0) * col("nt").cast("double") *
@@ -2480,7 +2480,7 @@ object Distribution {
         (col("o_orderpriority") === "1-URGENT").as("z"),
         cents(col("o_totalprice")).as("v"))
     val span = base.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-    val slices = base.crossJoin(broadcast(span))
+    val slices = base.crossJoin(span)
       .withColumn("slice",
         least(lit(5L), expr("((day - d0) * 5) div (d1 - d0 + 1) + 1")))
       .groupBy("slice")
@@ -2494,7 +2494,7 @@ object Distribution {
           .otherwise(lit(0).cast(d38))).as("qc"))
     val looks = spark.range(1, 6).select(col("id").as("look"))
     val cum = graft.scale.Silver.scratch(slices, "gs_slices")
-      .join(broadcast(looks), col("slice") <= col("look"))
+      .join(looks, col("slice") <= col("look"))
       .groupBy("look")
       .agg(sum(col("nt")).as("nt"), sum(col("st")).as("st"),
         sum(col("qt")).as("qt"), sum(col("nc")).as("nc"),
@@ -2533,7 +2533,7 @@ object Distribution {
         .groupBy(col("o_custkey")).agg(sum(cents(col("o_totalprice"))).as("y")),
       "hoover_spend") // feeds the totals row and the deviation pass
     val tot = spend.agg(count(lit(1)).as("n"), sum(col("y")).as("s"))
-    spend.crossJoin(broadcast(tot))
+    spend.crossJoin(tot)
       .agg(max(col("n")).as("n"), max(col("s")).as("s"),
         sum(abs(col("n").cast(d38) * col("y").cast(d38) -
           col("s").cast(d38))).as("dev"))
@@ -2582,7 +2582,7 @@ object Distribution {
         .groupBy(col("o_custkey")).agg(sum(cents(col("o_totalprice"))).as("y")),
       "lasym_spend") // feeds totals and the threshold pass
     val tot = spend.agg(count(lit(1)).as("n"), sum(col("y")).as("s"))
-    spend.crossJoin(broadcast(tot))
+    spend.crossJoin(tot)
       .agg(max(col("n")).as("n"), max(col("s")).as("s"),
         sum(when(col("n").cast(d38) * col("y").cast(d38) <
           col("s").cast(d38), 1L).otherwise(0L)).as("n_below"),
@@ -2698,7 +2698,7 @@ object Distribution {
       .select(col("g").as("n_groups"), col("m"), col("v"),
         (col("m") * col("c")).as("alpha"),
         ((lit(1.0) - col("m")) * col("c")).as("beta"))
-    perM.crossJoin(broadcast(prior))
+    perM.crossJoin(prior)
       .select(col("s_suppkey"), col("n"), col("x"),
         col("n_groups"), col("alpha"), col("beta"),
         (col("x").cast("double") / col("n").cast("double")).as("raw_rate"),

@@ -589,7 +589,7 @@ object EventOps {
           sum(col("cents")).as("m_cents")),
       "rfm_users") // feeds the horizon, the thresholds, and the coding
     val horizon = u.agg(max(col("last_day")).as("h"))
-    val r = u.crossJoin(broadcast(horizon))
+    val r = u.crossJoin(horizon)
       .withColumn("r_days", col("h") - col("last_day"))
       .select("user_id", "r_days", "f_cnt", "m_cents")
     val th = r.agg(
@@ -604,7 +604,7 @@ object EventOps {
              invert: Boolean): org.apache.spark.sql.Column =
       if (invert) when(v <= lo, 1L).when(v <= hi, 2L).otherwise(3L)
       else when(v <= lo, 3L).when(v <= hi, 2L).otherwise(1L)
-    r.crossJoin(broadcast(th))
+    r.crossJoin(th)
       .withColumn("r_code", code(col("r_days"), col("r1"), col("r2"), invert = true))
       .withColumn("f_code", code(col("f_cnt"), col("f1"), col("f2"), invert = false))
       .withColumn("m_code", code(col("m_cents"), col("m1"), col("m2"), invert = false))
@@ -662,7 +662,7 @@ object EventOps {
           count(lit(1)).as("n_events")),
       "churn_users") // feeds the horizon and the flagging
     val h = u.agg(max(col("last_day")).as("max_day"))
-    u.crossJoin(broadcast(h))
+    u.crossJoin(h)
       // <= : "no activity in the corpus's final horizonDays days" means a
       // user last seen ON day max_day - horizonDays has been silent for
       // exactly horizonDays days and IS churned; strict < required 31.
@@ -762,7 +762,7 @@ object EventOps {
     // behind it (right-censoring). Weeks beyond max(w) are not emitted.
     val bounds = uw.agg(max(col("w")).as("wmax"))
     classified.join(churned, Seq("w"), "full_outer")
-      .crossJoin(broadcast(bounds))
+      .crossJoin(bounds)
       .filter(col("w") <= col("wmax"))
       .select(col("w"),
         coalesce(col("n_new"), lit(0L)).as("n_new"),
@@ -798,7 +798,7 @@ object EventOps {
     windowed(28, "mau")
       .join(windowed(7, "wau"), Seq("anchor"), "left")
       .withColumn("wau", coalesce(col("wau"), lit(0L)))
-      .crossJoin(broadcast(bounds))
+      .crossJoin(bounds)
       .filter(col("anchor") >= col("d0") && col("anchor") <= col("d1"))
       .withColumn("stickiness", col("wau").cast("double") / col("mau"))
       .select(col("anchor").as("day"), col("wau"), col("mau"), col("stickiness"))
@@ -942,7 +942,7 @@ object EventOps {
       .groupBy("t").agg(sum(col("d")).as("delta"))
     val cum = Ranking.distributedCumSum(deltas, Seq(col("t").asc), Seq("delta"))
     val nSessions = sessions.agg(count(lit(1)).as("n_sessions"))
-    cum.crossJoin(broadcast(nSessions))
+    cum.crossJoin(nSessions)
       .agg(first(col("n_sessions")).as("n_sessions"),
         min(struct((-col("cum_delta")).as("nc"), col("t"))).as("w"))
       .select(col("n_sessions"), (-col("w.nc")).as("peak_concurrent"),
@@ -1148,7 +1148,7 @@ object EventOps {
       .agg(count(lit(1)).as("cnt"),
         countDistinct(col("user_id")).as("n_users"))
     val tot = counts.agg(sum(col("cnt")).as("total"))
-    counts.crossJoin(broadcast(tot))
+    counts.crossJoin(tot)
       .select(col("e1"), col("e2"), col("e3"), col("cnt"), col("n_users"),
         (col("cnt").cast("double") / col("total").cast("double"))
           .as("support"))

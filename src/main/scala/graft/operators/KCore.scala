@@ -174,7 +174,7 @@ object KCore {
     val sup = Tables.supplier(spark, dir)
       .select(col("s_suppkey"), col("s_nationkey"))
     val minNation = sup.agg(min(col("s_nationkey")).as("mn"))
-    val seeds = sup.join(broadcast(minNation), col("s_nationkey") === col("mn"))
+    val seeds = sup.join(minNation, col("s_nationkey") === col("mn"))
       .select(col("s_suppkey").cast("long").as("node"))
     bfs(coTradingPairs(spark, dir), seeds, rounds = 4)
       .select(col("node").cast("long").as("node"), col("dist"))
@@ -233,7 +233,7 @@ object KCore {
     val minSup = Tables.supplier(spark, dir)
       .agg(min(col("s_suppkey")).as("mk"))
     val seeds = Tables.supplier(spark, dir)
-      .join(broadcast(minSup), col("s_suppkey") === col("mk"))
+      .join(minSup, col("s_suppkey") === col("mk"))
       .select(col("s_suppkey").cast("long").as("node"))
     sssp(pairs, seeds, rounds = 4)
       .select(col("node").cast("long").as("node"), col("dist"))
@@ -370,7 +370,7 @@ object KCore {
       graft.scale.Pregel.nodeBound(und, "a"))
     val sup = Tables.supplier(spark, dir)
     val minSup = sup.agg(min(col("s_suppkey")).as("mk"))
-    val seed1 = sup.join(broadcast(minSup), col("s_suppkey") === col("mk"))
+    val seed1 = sup.join(minSup, col("s_suppkey") === col("mk"))
       .select(col("s_suppkey").cast("long").as("node"))
     val d1 = bfsOnUnd(und, seed1, rounds, bc)
     // far feeds the output row AND the second sweep's seed — materialize
@@ -381,7 +381,7 @@ object KCore {
     val s2 = d2.agg(max(col("dist")).as("est_diameter"),
       count(lit(1)).as("n_reached2"))
     far.select(col("node").as("far_node"), col("dist").as("far_dist"))
-      .crossJoin(broadcast(s1)).crossJoin(broadcast(s2))
+      .crossJoin(s1).crossJoin(s2)
       .select(col("far_node"), col("far_dist"), col("est_diameter"),
         col("n_reached1"), col("n_reached2"))
   }
@@ -498,7 +498,7 @@ object KCore {
         .agg(sum(col("cents")).as("v")),
       "net_values") // feeds the totals row and both edge-endpoint joins
     val tot = values.agg(count(lit(1)).as("n"), sum(col("v")).as("s"))
-    val z = values.crossJoin(broadcast(tot))
+    val z = values.crossJoin(tot)
       .select(col("node"),
         (col("n").cast(d38) * col("v").cast(d38) - col("s").cast(d38))
           .as("z"),
@@ -520,7 +520,7 @@ object KCore {
         sum((col("za") - col("zb")) * (col("za") - col("zb"))).as("gnum"))
     val den = zM.agg(max(col("n")).as("n"),
       sum(col("z") * col("z")).as("den"))
-    den.crossJoin(broadcast(edgeSums))
+    den.crossJoin(edgeSums)
   }
 
   /** Moran's I over the supplier co-supply graph (q_moran): is revenue
@@ -619,7 +619,7 @@ object KCore {
     val c1 = m1.agg(count(lit(1)).as("e1"))
     val c2 = m2.agg(count(lit(1)).as("e2"))
     val common = m1.join(m2, Seq("a", "b")).agg(count(lit(1)).as("common"))
-    c1.crossJoin(broadcast(c2)).crossJoin(broadcast(common))
+    c1.crossJoin(c2).crossJoin(common)
       .select(col("e1"), col("e2"), col("common"),
         (col("common").cast("double") /
           (col("e1") + col("e2") - col("common")).cast("double"))
@@ -656,7 +656,7 @@ object KCore {
         sum(col("x").cast(d38) * col("x").cast(d38)).as("sxx"),
         sum(col("x").cast(d38) * col("y").cast(d38)).as("sxy"),
         sum(col("y").cast(d38) * col("y").cast(d38)).as("syy"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("n_nodes"), col("n_new_edges"),
         ((col("n_nodes").cast(d38) * col("sxy") -
             col("sx").cast(d38) * col("sy").cast(d38))
@@ -728,7 +728,7 @@ object KCore {
     // one-row threshold frame, broadcast into the filter — no collect
     val thr = sup.agg(sum(col("cnt")).as("s"), count(lit(1)).as("n"))
       .select(greatest(lit(minSupport), expr("s div n")).as("eff_support"))
-    val e0 = sup.crossJoin(broadcast(thr))
+    val e0 = sup.crossJoin(thr)
       .filter(col("cnt") >= col("eff_support"))
       .select("a", "b")
     val und0 = e0.unionAll(e0.select(col("b").as("a"), col("a").as("b")))
@@ -851,7 +851,7 @@ object KCore {
       "constraint_sup")
     val thr = sup.agg(sum(col("support")).as("s"), count(lit(1)).as("n"))
       .select(greatest(lit(minSupport), expr("s div n")).as("eff_support"))
-    val e = sup.crossJoin(broadcast(thr))
+    val e = sup.crossJoin(thr)
       .filter(col("support") >= col("eff_support"))
       .select("a", "b")
     val und = graft.scale.Silver.scratch(
@@ -956,7 +956,7 @@ object KCore {
     val edgeAggs = cutoffs.map(k =>
       sum(when(col("da") > k && col("db") > k, 1L).otherwise(0L)).as(s"e_$k"))
     val edges = annotated.agg(edgeAggs.head, edgeAggs.tail: _*)
-    val wide = nodes.crossJoin(broadcast(edges))
+    val wide = nodes.crossJoin(edges)
     val rungs = cutoffs.map { k =>
       wide.select(lit(k).as("k"), col(s"n_$k").as("n_rich"),
         col(s"e_$k").as("e_rich"),

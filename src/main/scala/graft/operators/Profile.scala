@@ -157,7 +157,7 @@ object Profile {
     val actual = sub.as("x").join(sub.as("y"),
         col("x.l_partkey") === col("y.l_partkey"))
       .agg(count(lit(1)).as("actual_sub"))
-    full.crossJoin(broadcast(subEst)).crossJoin(broadcast(actual))
+    full.crossJoin(subEst).crossJoin(actual)
       .select(col("n_keys"), col("max_key_cnt"),
         col("est_full").cast("string").as("est_full"),
         col("est_sub").cast("long").as("est_sub"), col("actual_sub"),
@@ -221,7 +221,7 @@ object Profile {
     val grid = groups.crossJoin(global)
       .join(cells, Seq("seg", "nat", "band"), "left")
       .na.fill(0L, Seq("c"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
     val w = Window.partitionBy(col("seg"), col("nat")).orderBy(col("band"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     grid

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.scale.Silver
+
 /** Ranking / top-k / latest-per-key operators.
   *
   * Covers the reference's W1/W2/W7 surface (SURVEY.md §2.6):
@@ -76,9 +78,9 @@ object Ranking {
     // vocab: counts from one partitioning + local indices from another →
     // duplicate and skipped ranks). Freezing the frame — partition ids
     // and local indices included — makes the offsets provably consistent
-    // with the indexed rows. At cluster scale this materialization is a
-    // sorted silver table; here it is an eager localCheckpoint of the
-    // post-cut (aggregated, not corpus-sized) frame.
+    // with the indexed rows. The freeze goes through Silver.scratch: an
+    // eager localCheckpoint of the post-cut (aggregated, not corpus-sized)
+    // frame, or a parquet silver table under spark.graft.silver.dir.
     //
     // The range partition COUNT is left to AQE unless the caller pins
     // one (r15, guide §2.2): the old shuffle.partitions pin made every
@@ -87,16 +89,14 @@ object Ranking {
     // (8 cores 3× faster than 32 at sf0.1). AQE coalesces ADJACENT range
     // partitions, so the result is still a valid range partitioning and
     // rank = offset + local index is partitioning-independent either way.
-    val ranged = (if (numParts > 0) df.repartitionByRange(numParts, order: _*)
-        else df.repartitionByRange(order: _*))
-      .sortWithinPartitions(order: _*)
+    val ranged = Silver.scratch(byRange(df, order, numParts)
       // spark_partition_id / monotonically_increasing_id are
       // nondeterministic-flagged, so Catalyst will not reorder them across
       // the sort; local index = the id's intra-partition counter.
       .withColumn("__pid", spark_partition_id())
       .withColumn("__lidx",
-        monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)))
-      .localCheckpoint(true)
+        monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1))),
+      "rank_ranged")
     val counts = ranged.groupBy(col("__pid")).agg(count(lit(1)).as("__cnt"))
     // offset + total via a tiny parts×parts self-join — no window, no
     // single-partition exchange anywhere on the data path. The broadcast
@@ -112,6 +112,14 @@ object Ranking {
       .withColumn(rankCol, col("__offset") + col("__lidx") + 1L)
       .drop("__pid", "__lidx", "__offset")
   }
+
+  /** Range exchange on `order` (to `numParts` partitions when pinned),
+    * then a local sort: the two-pass shape's first pass. */
+  private def byRange(df: DataFrame, order: Seq[Column],
+                      numParts: Int): DataFrame =
+    (if (numParts > 0) df.repartitionByRange(numParts, order: _*)
+     else df.repartitionByRange(order: _*))
+      .sortWithinPartitions(order: _*)
 
   /** Distributed percent_rank over a unique total order: bitwise-equal to
     * `percent_rank().over(Window.orderBy(order))` (unique order ⇒ rank =
@@ -130,11 +138,11 @@ object Ranking {
     * before this one in `order` — WITHOUT a single-partition window.
     *
     * Same two-pass shape as [[distributedGlobalRank]]: range exchange +
-    * local sort (frozen by the checkpoint so the partition ids the offsets
-    * were computed from are the partition ids the rows carry), partition-
-    * local running sums via a `__pid`-partitioned window, then a broadcast
-    * per-partition offset from the numParts-row totals frame. No stage
-    * holds more than one range-partition of rows.
+    * local sort (frozen by the materialization so the partition ids the
+    * offsets were computed from are the partition ids the rows carry),
+    * partition-local running sums via a `__pid`-partitioned window, then
+    * a broadcast per-partition offset from the numParts-row totals frame.
+    * No stage holds more than one range-partition of rows.
     *
     * `order` must be a unique total order; value columns must be integral
     * (long) so the running sums are exact and engine-order-independent.
@@ -153,11 +161,8 @@ object Ranking {
                         totals: Boolean = false): DataFrame = {
     // partition count AQE-coalesced unless pinned — see
     // distributedGlobalRank (r15)
-    val ranged = (if (numParts > 0) df.repartitionByRange(numParts, order: _*)
-        else df.repartitionByRange(order: _*))
-      .sortWithinPartitions(order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
+    val ranged = Silver.scratch(byRange(df, order, numParts)
+      .withColumn("__pid", spark_partition_id()), "cumsum_ranged")
     val totalsAgg = valueCols.map(c => sum(col(c)).as(s"__t_$c"))
     val ptot = ranged.groupBy(col("__pid"))
       .agg(totalsAgg.head, totalsAgg.tail: _*)

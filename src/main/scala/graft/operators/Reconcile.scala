@@ -106,7 +106,7 @@ object Reconcile {
             .otherwise(col("o_totalprice"))))
       .unionByName(snap(
         o.filter(pmod(col("o_orderkey"), lit(113)) === 0)
-          .crossJoin(broadcast(maxKey))
+          .crossJoin(maxKey)
           .withColumn("o_orderkey", col("o_orderkey") + col("mk"))
           .drop("mk"))), "table_diff_b")
     snapshotDiff(a, b, buckets = 64).orderBy("k")

@@ -182,7 +182,7 @@ object Regression {
       .groupBy("day")
       .agg((sum(col("p")) * 100).cast("long").as("y"))
     val d0 = daily.agg(min(col("day")).as("d0"))
-    val m = daily.crossJoin(broadcast(d0))
+    val m = daily.crossJoin(d0)
       .select((col("day") - col("d0")).cast(d38).as("x"),
         col("y").cast(d38).as("y"))
       .agg(count(lit(1)).cast(d38).as("s0"),
@@ -522,7 +522,7 @@ object Regression {
       col("cxy").cast("string").cast("double") *
         col("cxy").cast("string").cast("double") / cxxD) / (nD * nD)
     val withS2 = base.withColumn("s2", rss / (nD - lit(2.0)))
-    daily.crossJoin(broadcast(withS2))
+    daily.crossJoin(withS2)
       .withColumn("u", col("n").cast(d38) * col("x").cast(d38) -
         col("sx").cast(d38))
       .withColumn("r", col("cxx") * (col("n").cast(d38) *
@@ -793,8 +793,8 @@ object Regression {
     }
     val n = daily.agg(count(lit(1)).as("n_days"))
     val nD = col("n_days").cast("double")
-    n.crossJoin(broadcast(rOf(1))).crossJoin(broadcast(rOf(2)))
-      .crossJoin(broadcast(rOf(3)))
+    n.crossJoin(rOf(1)).crossJoin(rOf(2))
+      .crossJoin(rOf(3))
       .select(col("n_days"), col("r1"), col("r2"), col("r3"),
         (nD * (nD + lit(2.0)) *
           (col("r1") * col("r1") / (nD - lit(1.0)) +

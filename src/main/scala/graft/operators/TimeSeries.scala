@@ -222,7 +222,7 @@ object TimeSeries {
       sum(when(col("sign") === 1L, 1L).otherwise(0L)).as("n_up"),
       sum(when(col("sign") === -1L, 1L).otherwise(0L)).as("n_down"),
       sum(when(col("sign") === 0L, 1L).otherwise(0L)).as("n_flat"))
-    counts.crossJoin(broadcast(changes))
+    counts.crossJoin(changes)
       .withColumn("n_runs", col("n_changes") + 1L)
       .withColumn("expected_runs",
         lit(1.0) + (lit(2L) * col("n_up") * col("n_down")).cast("double") /
@@ -248,7 +248,7 @@ object TimeSeries {
       .withColumn("one", lit(1L))
     val cum = Ranking.distributedCumSum(daily, Seq(col("day").asc), Seq("v", "one"))
     val tot = daily.agg(sum(col("v")).as("total_cents"), count(lit(1)).as("n_days"))
-    cum.crossJoin(broadcast(tot))
+    cum.crossJoin(tot)
       .select(col("day"), col("n_days"), col("total_cents"),
         abs(col("cum_v").cast(d38) * col("n_days").cast(d38) -
             col("cum_one").cast(d38) * col("total_cents").cast(d38)).as("s"))
@@ -303,7 +303,7 @@ object TimeSeries {
     val horizon = o.agg(max(col("day")).as("dmax"))
     val perCust = firsts
       .join(seconds, Seq("ck"), "left")
-      .crossJoin(broadcast(horizon))
+      .crossJoin(horizon)
       .select(
         when(col("d2").isNotNull, expr("(d2 - d1) div 7"))
           .otherwise(expr("(dmax - d1) div 7")).as("w"),
@@ -314,7 +314,7 @@ object TimeSeries {
       .withColumn("cnt", col("n_events") + col("n_censored"))
     val tot = hist.agg(sum(col("cnt")).as("total"))
     Ranking.distributedCumSum(hist, Seq(col("w").asc), Seq("cnt"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .withColumn("n_at_risk",
         col("total") - col("cum_cnt") + col("cnt"))
       .select(col("w"), col("n_at_risk"), col("n_events"), col("n_censored"),
@@ -377,7 +377,7 @@ object TimeSeries {
         .agg((sum(col("p")) * 100).cast("long").as("v")),
       "decomp_daily") // feeds the offset join on both sides
     val offsets = (-3 to 3).map(_.toLong).toDF("off")
-    val s7 = daily.crossJoin(broadcast(offsets))
+    val s7 = daily.crossJoin(offsets)
       .select((col("day") + col("off")).as("center"), col("v"))
       .groupBy("center")
       .agg(count(lit(1)).as("w_n"), sum(col("v")).as("s7"))
@@ -421,7 +421,7 @@ object TimeSeries {
       col("s").cast("double") * col("s").cast("double") /
         col("n_days").cast("double")) /
       (col("n_days").cast("double") - lit(1.0)))
-    val paa = daily.crossJoin(broadcast(stats))
+    val paa = daily.crossJoin(stats)
       .withColumn("seg",
         expr(s"((day - d0) * $segments) div (d1 - d0 + 1)"))
       .groupBy("seg")
@@ -473,7 +473,7 @@ object TimeSeries {
         sum(col("t") * (col("t") - 1L) * (lit(2L) * col("t") + 5L)),
         lit(0L)).as("tie_term"))
     val n = weekly.agg(count(lit(1)).as("n_weeks"))
-    n.crossJoin(broadcast(s)).crossJoin(broadcast(ties))
+    n.crossJoin(s).crossJoin(ties)
       .withColumn("var18",
         col("n_weeks") * (col("n_weeks") - 1L) *
           (lit(2L) * col("n_weeks") + 5L) - col("tie_term"))
@@ -630,7 +630,7 @@ object TimeSeries {
     val cum = Ranking.distributedCumSum(daily, Seq(col("day").asc),
       Seq("v", "one"))
     val tot = daily.agg(sum(col("v")).as("s"), count(lit(1)).as("nd"))
-    cum.crossJoin(broadcast(tot))
+    cum.crossJoin(tot)
       .filter(col("cum_one") < col("nd")) // a split needs a right segment
       .select(col("day"), col("cum_one").as("n_left"),
         (col("nd") - col("cum_one")).as("n_right"), col("nd"),
@@ -673,7 +673,7 @@ object TimeSeries {
     val cum = Ranking.distributedCumSum(daily, Seq(col("day").asc),
       Seq("v", "one"))
     val tot = daily.agg(sum(col("v")).as("s"), count(lit(1)).as("nd"))
-    val path = cum.crossJoin(broadcast(tot))
+    val path = cum.crossJoin(tot)
       .select(col("day"),
         (col("cum_v").cast(d38) * col("nd").cast(d38) -
          col("cum_one").cast(d38) * col("s").cast(d38)).as("pn"),
@@ -809,7 +809,7 @@ object TimeSeries {
       sum(col("s")).as("ss"), sum(col("r")).as("sr"))
     val xbb = col("ss").cast("double") / (col("n_weeks") * 7L).cast("double")
     val rbar = col("sr").cast("double") / col("n_weeks").cast("double")
-    weeks.crossJoin(broadcast(centers))
+    weeks.crossJoin(centers)
       .select(col("week"),
         (col("s").cast("double") / lit(7.0)).as("xbar"),
         col("r").cast("double").as("r"),
@@ -846,7 +846,7 @@ object TimeSeries {
       .select(col("c_custkey"), (col("c_mktsegment") === "BUILDING").as("g1"))
     val end = per.agg(max(col("last_day")).as("corpus_end"))
     val life = per.join(grp, col("o_custkey") === col("c_custkey"))
-      .crossJoin(broadcast(end))
+      .crossJoin(end)
       .select((col("last_day") - col("first_day")).as("t"), col("g1"),
         when(col("last_day") < col("corpus_end") - 90L, 1L).otherwise(0L)
           .as("event"))
@@ -859,7 +859,7 @@ object TimeSeries {
       sum(col("cnt1")).as("n1_total"))
     val cum = Ranking.distributedCumSum(grid, Seq(col("t").asc),
       Seq("cnt", "cnt1"))
-    val risk = cum.crossJoin(broadcast(tot))
+    val risk = cum.crossJoin(tot)
       .withColumn("n_t", col("n_total") - (col("cum_cnt") - col("cnt")))
       .withColumn("n1_t", col("n1_total") - (col("cum_cnt1") - col("cnt1")))
       .filter(col("d") > 0L)
@@ -872,7 +872,7 @@ object TimeSeries {
             "(n_t * n_t * (n_t - 1))"))
     val sums = risk.agg(count(lit(1)).as("n_event_times"),
       sum(col("oe_w")).as("u_w"), sum(col("v_w")).as("v_sum"))
-    sums.crossJoin(broadcast(tot))
+    sums.crossJoin(tot)
       .select(col("n_total"), col("n1_total"), col("n_event_times"),
         ((col("u_w").cast("double") / lit(1e6)) *
           (col("u_w").cast("double") / lit(1e6)) /
@@ -902,7 +902,7 @@ object TimeSeries {
     val pbar = col("xx").cast("double") / col("nn").cast("double")
     val rate = col("x_w").cast("double") / col("n_w").cast("double")
     val sigma = sqrt(pbar * (lit(1.0) - pbar) / col("n_w").cast("double"))
-    weekly.crossJoin(broadcast(tot))
+    weekly.crossJoin(tot)
       .select(col("week"), col("n_w"), col("x_w"), rate.as("p_week"),
         pbar.as("p_bar"),
         (pbar - lit(3.0) * sigma).as("lcl"),
@@ -1120,7 +1120,7 @@ object TimeSeries {
         max(expr("unix_millis(cast(o_orderdate as timestamp)) div 86400000"))
           .as("last_day"))
     val end = per.agg(max(col("last_day")).as("corpus_end"))
-    val life = per.crossJoin(broadcast(end))
+    val life = per.crossJoin(end)
       .select((col("last_day") - col("first_day")).as("t"),
         when(col("last_day") < col("corpus_end") - 90L, 1L).otherwise(0L)
           .as("event"))
@@ -1129,7 +1129,7 @@ object TimeSeries {
     val tot = grid.agg(sum(col("cnt")).as("n_total"))
     val cum1 = Ranking.distributedCumSum(grid, Seq(col("t").asc), Seq("cnt"))
     val withRisk = graft.scale.Silver.scratch(
-      cum1.crossJoin(broadcast(tot))
+      cum1.crossJoin(tot)
         .withColumn("n_risk", col("n_total") - (col("cum_cnt") - col("cnt")))
         .withColumn("h", expr("(1000000000 * d) div n_risk")),
       "na_grid") // feeds the second cumsum and the output filter
@@ -1169,7 +1169,7 @@ object TimeSeries {
     val tot = daily.agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
     def tw(w: Seq[Long]) = element_at(
       array(w.map(lit): _*), (col("day") % 7).cast("int") + 1).cast(d38)
-    val sums = daily.crossJoin(broadcast(tot))
+    val sums = daily.crossJoin(tot)
       .withColumn("r", col("n").cast(d38) * col("v").cast(d38) -
         col("s").cast(d38))
       .agg(max(col("n")).as("n_days"),

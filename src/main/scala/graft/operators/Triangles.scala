@@ -183,7 +183,7 @@ object Triangles {
         expr("sw div 2").as("wedges"))
     val triTotal = nodeTriangleCounts(und.select(col("x").as("a"), col("y").as("b")), normalized = true)
       .agg(coalesce(sum(col("tri_cnt")), lit(0L)).as("tri3")) // = 3 · T
-    degStats.crossJoin(broadcast(triTotal))
+    degStats.crossJoin(triTotal)
       .withColumn("triangles", expr("tri3 div 3"))
       .withColumn("global_coef",
         col("tri3").cast("double") / col("wedges"))
@@ -258,19 +258,19 @@ object Triangles {
       .agg(count(lit(1)).as("e_in"))
     val per = aC.join(eC, Seq("nk"), "left")
       .na.fill(0L, Seq("e_in"))
-      .crossJoin(broadcast(m))
+      .crossJoin(m)
       .withColumn("num",
         lit(4).cast(d38) * col("m").cast(d38) * col("e_in").cast(d38) -
           col("a_c").cast(d38) * col("a_c").cast(d38))
     val q = per.agg(sum(col("num")).as("qnum"))
-      .crossJoin(broadcast(m))
+      .crossJoin(m)
       .select((col("qnum").cast("double") /
         (lit(4).cast(d38) * col("m").cast(d38) * col("m").cast(d38))
           .cast("double")).as("modularity"))
     per
       .join(broadcast(Tables.nation(spark, dir)),
         col("nk") === col("n_nationkey"))
-      .crossJoin(broadcast(q))
+      .crossJoin(q)
       .select(col("n_name").as("nation_name"), col("n_suppliers"),
         col("e_in"), col("a_c"),
         (col("num").cast("double") /

@@ -886,7 +886,7 @@ object Dedup {
       val nCand = cand.agg(count(lit(1)).as("n_cand_pairs"))
       val nHit = cand.join(truth, Seq("d1", "d2"))
         .agg(count(lit(1)).as("n_hit"))
-      nCand.crossJoin(broadcast(nTruth)).crossJoin(broadcast(nHit))
+      nCand.crossJoin(nTruth).crossJoin(nHit)
         .select(lit(width.toLong).as("row_width"),
           lit((NumHashes / width).toLong).as("n_bands"),
           col("n_cand_pairs"), col("n_true_pairs"), col("n_hit"),

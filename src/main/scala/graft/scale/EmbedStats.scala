@@ -159,7 +159,7 @@ object EmbedStats {
       .groupBy(col("label").cast("long").as("label"))
       .agg(count(lit(1)).as("cnt"))
     val tot = counts.agg(sum(col("cnt")).as("total"), max(col("cnt")).as("mx"))
-    counts.crossJoin(broadcast(tot))
+    counts.crossJoin(tot)
       .select(col("label"), col("cnt"),
         (col("cnt").cast("double") / col("total")).as("share"),
         (col("cnt") === col("mx")).as("is_majority"))
@@ -193,7 +193,7 @@ object EmbedStats {
           (col("n") * (col("n") - 1L)).cast("double"))
     val bounds = per.agg(max(col("variance")).as("mx"),
       min(col("variance")).as("mn"))
-    per.crossJoin(broadcast(bounds))
+    per.crossJoin(bounds)
       .select(col("dim"), col("n"), col("sq"), col("variance"),
         (col("variance") / col("mx")).as("rel_variance"),
         (col("mx") / col("mn")).as("anisotropy"))
@@ -263,15 +263,14 @@ object EmbedStats {
     val d38 = "decimal(38,0)"
     val (_, aMat, x) = pcaComponent(spark, dir, iters)
     val xA = aMat
-      .join(broadcast(x.select(col("j").as("k"), col("x").as("xk"))), "k")
-      .join(broadcast(x.select(col("j"), col("x").as("xj"))), "j")
+      .join(x.select(col("j").as("k"), col("x").as("xk")), "k")
+      .join(x.select(col("j"), col("x").as("xj")), "j")
     val rq = xA.agg(
         sum(col("xj").cast(d38) * col("a") * col("xk").cast(d38)).as("num"))
-      .crossJoin(broadcast(
-        x.agg(sum(col("x") * col("x")).as("den"))))
+      .crossJoin(x.agg(sum(col("x") * col("x")).as("den")))
       .select((col("num").cast("double") / col("den").cast("double"))
         .as("rayleigh"))
-    x.crossJoin(broadcast(rq))
+    x.crossJoin(rq)
       .select(col("j").as("dim"), col("x").as("component"), col("rayleigh"))
       .orderBy("dim")
   }
@@ -367,7 +366,7 @@ object EmbedStats {
     val d38 = "decimal(38,0)"
     val (qv, _, x) = pcaComponent(spark, dir, iters)
     val proj = qv
-      .join(broadcast(x), "j")
+      .join(x, "j")
       .groupBy(col("vec_id"), col("label"))
       .agg(sum(col("q") * col("x")).as("p"))
     val per = proj.groupBy(col("label").cast("long").as("label"))
@@ -418,14 +417,14 @@ object EmbedStats {
       "grid_cells") // feeds totals, core split, and the noise row
     val tot = cells.agg(sum(col("cnt")).as("n_pts"),
       count(lit(1)).as("n_cells"))
-    val withTot = cells.crossJoin(broadcast(tot))
+    val withTot = cells.crossJoin(tot)
     val core = withTot
       .filter(col("cnt") * col("n_cells") >= lit(2L) * col("n_pts"))
       .withColumn("id", col("gx") * 100L + col("gy"))
     val off = spark.range(-1, 2).select(col("id").as("dx"))
       .crossJoin(spark.range(-1, 2).select(col("id").as("dy")))
       .filter(!(col("dx") === 0L && col("dy") === 0L))
-    val e = core.crossJoin(broadcast(off))
+    val e = core.crossJoin(off)
       .select((col("gx") + col("dx")).as("ngx"),
         (col("gy") + col("dy")).as("ngy"), col("id").as("u"))
       .join(core.select(col("gx").as("ngx"), col("gy").as("ngy"),
@@ -756,7 +755,7 @@ object EmbedStats {
           floor(col("v").cast("double") * 1000000d).cast("long").as("q")),
       "jl_q") // feeds the projection AND the original-distance pass
     val js = spark.range(outDims).select(col("id").as("j"))
-    val proj = q.crossJoin(broadcast(js))
+    val proj = q.crossJoin(js)
       .select(col("vec_id"), col("j"),
         when(substring(md5(concat(col("j").cast("string"), lit("|"),
             col("i").cast("string"))), 1, 1)
@@ -818,7 +817,7 @@ object EmbedStats {
       "dbscan_pts") // feeds all four join sides
     val off = spark.range(-1, 2).select(col("id").as("dx"))
       .crossJoin(spark.range(-1, 2).select(col("id").as("dy")))
-    val cand = p.crossJoin(broadcast(off))
+    val cand = p.crossJoin(off)
       .select(col("vec_id").as("a"), col("x").as("ax"), col("y").as("ay"),
         (col("cx") + col("dx")).as("ncx"), (col("cy") + col("dy")).as("ncy"))
       .join(p.select(col("vec_id").as("b"), col("x").as("bx"),
@@ -838,7 +837,7 @@ object EmbedStats {
       .agg(count(lit(1)).as("n_border"))
     withCnt.agg(count(lit(1)).as("n_points"),
         sum(when(col("cnt") >= minPts, 1L).otherwise(0L)).as("n_core"))
-      .crossJoin(broadcast(border))
+      .crossJoin(border)
       .select(col("n_points"), col("n_core"), col("n_border"),
         (col("n_points") - col("n_core") - col("n_border")).as("n_noise"))
   }
@@ -971,7 +970,7 @@ object EmbedStats {
         sum(col("ai")).as("n"))
     val sb = cells.groupBy("cell").agg(sum(col("nij")).as("bj"))
       .agg(sum(expr("(bj * (bj - 1)) div 2")).as("b"))
-    sa.crossJoin(broadcast(sb)).crossJoin(broadcast(sij))
+    sa.crossJoin(sb).crossJoin(sij)
       .withColumn("t", expr("(n * (n - 1)) div 2"))
       .select(col("n"), col("sc"), col("a"), col("b"), col("t"),
         ((lit(2).cast(d38) * col("t").cast(d38) * col("sc").cast(d38) -

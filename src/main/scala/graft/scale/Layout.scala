@@ -335,14 +335,14 @@ object Layout {
       ZonemapProbes.map { case (m, lo, hi) => (m.toLong, lo, hi) }
         .toDF("m", "lo", "hi")
     }
-    val scanned = z.join(broadcast(probes),
+    val scanned = z.join(probes,
         col("min_d") < col("hi") && col("max_d") >= col("lo"))
       .groupBy("m", "lo", "hi")
       .pivot("layout", Seq("natural", "shipdate"))
       .agg(count(lit(1)))
       .withColumnRenamed("natural", "shards_natural")
       .withColumnRenamed("shipdate", "shards_sorted")
-    val matched = rows.crossJoin(broadcast(probes))
+    val matched = rows.crossJoin(probes)
       .filter(col("d") >= col("lo") && col("d") < col("hi"))
       .groupBy("m").agg(count(lit(1)).as("rows_matched"))
     scanned.join(matched, Seq("m"), "left")

@@ -147,7 +147,7 @@ object LmScore {
       .select(explode(split(col("text"), " ")).as("word"))
       .groupBy("word").agg(count(lit(1)).as("raw_cnt"))
     uni.join(cont, Seq("word"), "left").join(succ, Seq("word"), "left")
-      .crossJoin(broadcast(types))
+      .crossJoin(types)
       .select(col("word"), col("raw_cnt"),
         coalesce(col("n_cont"), lit(0L)).as("n_cont"),
         coalesce(col("n_succ"), lit(0L)).as("n_succ"),

@@ -30,6 +30,14 @@ import org.apache.spark.sql.functions.broadcast
   * materialized side is just over Spark's threshold, broadcasting it
   * measured faster, and raising the threshold slowed other joins.
   *
+  * These are the engine's hints for sides the analyzer cannot bound. A
+  * side with a defined `maxRows` (a global aggregate, a `limit(n)`, a
+  * literal frame) takes no hint anywhere: the planner sizes it from its
+  * bound and broadcasts it itself (SCALE.md, Joins), and `PlanGateSpec`
+  * fails a hint over such a side in any query's plan. [[state]] does not
+  * look at the bound, so labeled BFS's first round hints its `limit(4)`
+  * seeds too; that round is materialized before any query plan sees it.
+  *
   * Both paths compute bit-identical results (all round arithmetic is
   * exact integer min/sum aggregation — join strategy cannot change it);
   * `PregelPathSpec` pins that equivalence.

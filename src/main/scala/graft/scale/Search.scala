@@ -134,7 +134,7 @@ object Search {
           sum(when(col(s"tf_$i") > 0, 1L).otherwise(0L)).as(s"df_$i"))
     val stats = base.agg(statAggs.head, statAggs.tail: _*)
 
-    val scored = base.crossJoin(broadcast(stats))
+    val scored = base.crossJoin(stats)
     val avgdl = col("sum_dl").cast("double") / col("n").cast("double")
     def termScore(i: Int): Column = {
       val tf = col(s"tf_$i").cast("double")
@@ -371,7 +371,7 @@ object Search {
     bi
       .join(uni.select(col("ngram").as("w1"), col("cnt").as("c1")), Seq("w1"))
       .join(uni.select(col("ngram").as("w2"), col("cnt").as("c2")), Seq("w2"))
-      .crossJoin(broadcast(nTotal))
+      .crossJoin(nTotal)
       .withColumn("score",
         (col("c_xy") * col("n_total")).cast("double") /
           (col("c1") * col("c2")).cast("double"))
@@ -439,7 +439,7 @@ object Search {
     val tf = Silver.scratch(termFrequencies(docs), "tfidf_tf")
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-    val scored = tf.join(dfreq, "term").crossJoin(broadcast(nDocs))
+    val scored = tf.join(dfreq, "term").crossJoin(nDocs)
       .withColumn("score",
         (col("tf") * col("n_docs")).cast("double") / col("df"))
       .select("doc_id", "term", "tf", "df", "score")
@@ -474,11 +474,11 @@ object Search {
     val total = ranked.agg(sum(col("cnt")).as("total"))
     val cuts = docs.sparkSession
       .createDataFrame(cutoffs.map(Tuple1(_))).toDF("cutoff")
-    ranked.crossJoin(broadcast(cuts))
+    ranked.crossJoin(cuts)
       .groupBy("cutoff")
       .agg(sum(when(col("rnk") <= col("cutoff"), col("cnt"))
         .otherwise(lit(0L))).as("covered"))
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .withColumn("share", col("covered").cast("double") / col("total"))
       .select("cutoff", "covered", "share")
       .orderBy("cutoff")
@@ -514,7 +514,7 @@ object Search {
       "keyness_tok") // feeds the totals and the scoring
     val totals = tok.agg(sum(col("a")).as("n_en"), sum(col("b")).as("n_rest"))
     tok.filter(col("a") + col("b") >= minCount)
-      .crossJoin(broadcast(totals))
+      .crossJoin(totals)
       .withColumn("score",
         (col("a") * (col("n_rest") + 1)).cast("double") /
           ((col("b") + 1) * col("n_en")).cast("double"))
@@ -556,7 +556,7 @@ object Search {
       max(when(col("fr") <= expr(s"($i * n_docs + ${deciles - 1}) div $deciles"),
         col("cum_c"))).as(s"v$i")
     }
-    val wide = cum.crossJoin(broadcast(tot))
+    val wide = cum.crossJoin(tot)
       .agg(first(col("n_docs")).as("n_docs"), readings: _*)
     // unpivot the ten readings into (decile, docs_cutoff, vocab_size)
     val stackArgs = (1 to deciles).map { i =>
@@ -595,7 +595,7 @@ object Search {
           (col("l_extendedprice").cast("decimal(18,2)") * 100)
             .cast("long").as("v"))
         .join(o, col("l_orderkey") === col("o_orderkey"))
-        .crossJoin(broadcast(bounds))
+        .crossJoin(bounds)
         .withColumn("half",
           when(col("day") * 2 <= col("d0") + col("d1"), lit("h1"))
             .otherwise(lit("h2")))
@@ -605,7 +605,7 @@ object Search {
     def rankedTop(h: String): DataFrame = {
       val t = perHalf.filter(col("half") === h).select(col("part"), col("rev"))
         .orderBy(col("rev").desc, col("part").asc).limit(k)
-      t.as("a").join(broadcast(t.as("b")),
+      t.as("a").join(t.as("b"),
           col("b.rev") > col("a.rev") ||
             (col("b.rev") === col("a.rev") && col("b.part") < col("a.part")),
           "left")
@@ -616,7 +616,7 @@ object Search {
       .join(rankedTop("h2").select(col("part"), col("r").as("rb")), "part")
       .select(col("part"), greatest(col("ra"), col("rb")).as("dmin"))
     val spine = spark.range(1, k + 1).select(col("id").as("d"))
-    val ov = spine.join(broadcast(common), col("dmin") <= col("d"), "left")
+    val ov = spine.join(common, col("dmin") <= col("d"), "left")
       .groupBy("d").agg(count(col("part")).as("ov"))
     ov.select(col("d"), col("ov"),
         expr("(2520 div d) * shiftleft(1L, cast(10 - d as int)) * ov")
@@ -690,7 +690,7 @@ object Search {
       docs.select(col("doc_id"),
         posexplode(toks(col("text"))).as(Seq("pos", "term"))),
       "ph_pos") // the positional index: feeds both phrase-term probes
-    val p = pos.crossJoin(broadcast(phrase))
+    val p = pos.crossJoin(phrase)
       .filter(col("term") === split(col("phrase"), " ").getItem(0))
       .select(col("doc_id"), col("pos"), col("phrase"), col("witness_count"))
     // the true-size index is over the broadcast threshold at sf0.1, but

@@ -127,7 +127,7 @@ object Similarity {
       .agg(count(lit(1)).as("n_mutual"))
     val tot = edges.agg(count(lit(1)).as("n_edges"))
     val pts = emb.agg(count(lit(1)).as("n_points"))
-    pts.crossJoin(broadcast(tot)).crossJoin(broadcast(mutual))
+    pts.crossJoin(tot).crossJoin(mutual)
       .select(col("n_points"), lit(k.toLong).as("k"), col("n_edges"),
         col("n_mutual"),
         (col("n_mutual").cast("double") / col("n_edges").cast("double"))
@@ -511,7 +511,7 @@ object Similarity {
     val nc = bucket.agg(count(lit(1)).as("n_candidates"))
     val hits = approx.join(exact.select("vec_id"), Seq("vec_id"), "left_semi")
       .agg(count(lit(1)).as("n_hits"))
-    nc.crossJoin(broadcast(hits))
+    nc.crossJoin(hits)
       .select(col("n_candidates"), lit(k.toLong).as("k"), col("n_hits"),
         (col("n_hits").cast("double") / lit(k.toDouble)).as("recall"))
   }

@@ -758,7 +758,7 @@ object TextAnalysis {
     val e = rt.join(ct, "label")
       .agg(coalesce(sum(col("rt").cast(d38) * col("ct")), lit(0L).cast(d38))
         .cast("long").as("sum_e"))
-    tot.crossJoin(broadcast(e))
+    tot.crossJoin(e)
       .select(col("n"), col("diag"), col("sum_e"),
         (col("diag").cast("double") / col("n").cast("double")).as("po"),
         (col("sum_e").cast("double") /
@@ -800,7 +800,7 @@ object TextAnalysis {
       .orderBy(col("tc").desc, col("term").asc).limit(topT)
       .select("term")
     val totals = st.groupBy("source").agg(sum(col("c")).as("t"))
-    val rq = totals.crossJoin(broadcast(top))
+    val rq = totals.crossJoin(top)
       .join(st, Seq("source", "term"), "left")
       .select(col("source"), col("term"),
         expr("(coalesce(c, 0L) * 1000000000) div t").as("rq"))
@@ -1013,7 +1013,7 @@ object TextAnalysis {
     docs.groupBy("bucket")
       .agg(count(lit(1)).as("n_docs"), sum(col("w")).as("sum_words"),
         sum(col("syl")).as("sum_syllables"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("bucket"), col("n_docs"), col("sum_words"),
         col("sum_syllables"),
         (col("n_docs").cast("double") / col("n_total").cast("double"))

@@ -183,7 +183,7 @@ object TrainingData {
     val counts = d.groupBy("source").agg(count(lit(1)).as("n_docs"))
       .withColumn("sq", floor(sqrt(col("n_docs").cast("double")) * 1000000d).cast("long"))
     val den = counts.agg(sum(col("sq")).as("den"))
-    val rates = counts.crossJoin(broadcast(den))
+    val rates = counts.crossJoin(den)
       .withColumn("rate",
         least(lit(1.0), lit(targetDocs.toDouble) * col("sq").cast("double") /
           col("den").cast("double") / col("n_docs").cast("double")))
@@ -270,7 +270,7 @@ object TrainingData {
           .cast("long")).as("v")),
       "pps_per") // feeds the universe total and the sampling pass
     val tot = per.agg(sum(col("v")).as("big_v"), count(lit(1)).as("n"))
-    per.crossJoin(broadcast(tot))
+    per.crossJoin(tot)
       .select(col("o_custkey"), col("v"), col("big_v"), col("n"),
         (lit(k).cast(d38) * col("v").cast(d38)).as("kv"),
         hashUniform(col("o_custkey")).as("u"))
@@ -437,7 +437,7 @@ object TrainingData {
     val totals = fc.agg(
       sum(col("cr")).as("tr"), sum(col("ct")).as("tt"))
     val d38 = "decimal(38,0)"
-    val w = fc.crossJoin(broadcast(totals))
+    val w = fc.crossJoin(totals)
       .select(col("tok"),
         expr(s"CAST((CAST(1000000 AS $d38) * (ct + 1) * tr) div ((CAST(cr AS $d38) + 1) * tt) AS BIGINT)")
           .as("w"))
@@ -521,7 +521,7 @@ object TrainingData {
       "alloc_counts") // feeds totals, rank join, and the output
     val tot = counts.agg(sum(col("n_docs")).as("n_total"),
       count(lit(1)).as("n_sources"))
-    val withBase = counts.crossJoin(broadcast(tot))
+    val withBase = counts.crossJoin(tot)
       .withColumn("base", expr(s"($k * n_docs) div n_total"))
       .withColumn("rem", expr(s"$k * n_docs - base * n_total"))
     val ranked = withBase.as("a").join(withBase.as("b"),
@@ -534,7 +534,7 @@ object TrainingData {
         first(col("a.rem")).as("rem"),
         count(col("b.source")).as("n_better"))
     val leftover = withBase.agg((lit(k) - sum(col("base"))).as("leftover"))
-    ranked.crossJoin(broadcast(leftover))
+    ranked.crossJoin(leftover)
       .withColumn("extra", col("n_better") < col("leftover"))
       .withColumn("alloc",
         col("base") + when(col("extra"), 1L).otherwise(0L))
@@ -562,7 +562,7 @@ object TrainingData {
       "neg_pos") // feeds the generator and the anti-join
     val maxPart = Tables.part(spark, dir)
       .agg(max(col("p_partkey")).as("max_part"))
-    val cands = positives.crossJoin(broadcast(maxPart))
+    val cands = positives.crossJoin(maxPart)
       .select(col("user"), col("part"),
         explode(sequence(lit(1), lit(m))).as("i"), col("max_part"))
       .withColumn("neg_part",
@@ -687,7 +687,7 @@ object TrainingData {
         min(col("n_chars")).as("min_chars"),
         max(col("n_chars")).as("max_chars"))
     val tot = shards.agg(sum(col("total_chars")).as("grand"))
-    shards.crossJoin(broadcast(tot))
+    shards.crossJoin(tot)
       .withColumn("balance_ratio",
         (col("total_chars") * nShards).cast("double") /
           col("grand").cast("double"))

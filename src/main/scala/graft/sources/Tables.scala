@@ -45,9 +45,9 @@ object Tables {
     * plan analysis + file listing, and accessors run once per query
     * construction. */
   // Keyed by (path, signature, floor): the decision compares the table's
-  // split count AGAINST the floor, so a session that changes
-  // spark.graft.scan.minPartitions (or defaultParallelism) must not
-  // reuse a verdict computed against a different floor — a stale `true`
+  // split count AGAINST the floor, so a context with another
+  // defaultParallelism must not reuse a verdict computed against a
+  // different floor — a stale `true`
   // would re-shuffle an already-parallel corpus DOWN, a stale `false`
   // would silently disable the fan after the floor is raised.
   private val fanDecision = new scala.collection.concurrent.TrieMap[(String, Long, Int), Boolean]
@@ -106,18 +106,12 @@ object Tables {
     * re-shuffled — that can REDUCE its parallelism) and under
     * [[FanMaxBytes]] (re-shuffling must be cheap relative to the map
     * work). Filter pushdown and column pruning are unaffected —
-    * predicates push through Repartition into the scan. Disable with
-    * `spark.graft.scan.minPartitions=1`. */
+    * predicates push through Repartition into the scan. The floor is
+    * `defaultParallelism` (Spark's `spark.default.parallelism`; 1
+    * disables the fan). */
   private def parallelismFloor(spark: SparkSession, df: DataFrame,
                                path: String): DataFrame = {
-    val confVal = spark.conf.getOption("spark.graft.scan.minPartitions")
-    val floor = confVal.map { v =>
-      try v.trim.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"spark.graft.scan.minPartitions must be an integer (got '$v'); " +
-            "use 1 to disable the small-scan parallelism floor")
-      }
-    }.getOrElse(spark.sparkContext.defaultParallelism)
+    val floor = spark.sparkContext.defaultParallelism
     val fan = floor > 1 && fanDecision.getOrElseUpdate(
       (path, contentSignature(path), floor),
       df.queryExecution.analyzed.stats.sizeInBytes < FanMaxBytes &&

@@ -80,16 +80,26 @@ object LiveScores {
     start(spark, inputDir, tableDir, checkpointDir, Trigger.AvailableNow())
 
   private def start(spark: SparkSession, inputDir: String, tableDir: String,
-                    checkpointDir: String, trigger: Trigger): StreamingQuery = {
-    val raw = spark.readStream.schema(RawSchema).json(inputDir)
-    withDedup(normalize(raw))
+                    checkpointDir: String, trigger: Trigger): StreamingQuery =
+    startUpsert(spark, RawSchema, inputDir, checkpointDir, trigger)(
+      raw => withDedup(normalize(raw)))(upsertBatch(_, _, tableDir))
+
+  /** The one poller wiring, shared with [[OddsStream.runOnce]]: a JSON
+    * file source over `inputDir`, `prepare` (normalize + watermark
+    * dedup), then an append `foreachBatch` that hands each micro-batch
+    * to `upsert` with the batch's own session. */
+  private[streaming] def startUpsert(spark: SparkSession, schema: StructType,
+                                     inputDir: String, checkpointDir: String,
+                                     trigger: Trigger)(
+      prepare: DataFrame => DataFrame)(
+      upsert: (SparkSession, DataFrame) => Unit): StreamingQuery =
+    prepare(spark.readStream.schema(schema).json(inputDir))
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertBatch(batch.sparkSession, batch, tableDir)
+        upsert(batch.sparkSession, batch)
       }
       .start()
-  }
 }

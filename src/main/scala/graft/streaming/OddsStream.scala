@@ -176,16 +176,8 @@ object OddsStream {
   /** Drain-available pipeline over a snapshot-drop directory (the 300 s
     * loop runs the same graph with a ProcessingTime trigger). */
   def runOnce(spark: SparkSession, inputDir: String, tableDir: String,
-              checkpointDir: String): StreamingQuery = {
-    val raw = spark.readStream.schema(RawSchema).json(inputDir)
-    withDedup(normalize(raw))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertBatch(batch.sparkSession, batch, tableDir)
-      }
-      .start()
-  }
+              checkpointDir: String): StreamingQuery =
+    LiveScores.startUpsert(spark, RawSchema, inputDir, checkpointDir,
+      Trigger.AvailableNow())(raw => withDedup(normalize(raw)))(
+      upsertBatch(_, _, tableDir))
 }

@@ -3,10 +3,12 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildSide}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.graft.Shims
@@ -32,7 +34,10 @@ import graft.SparkEntry
   *    executed file lists every action of every session (materializations,
   *    count jobs, stream micro-batches in a cloned session, the final
   *    count) with its final plan, headed by a one-line join summary that
-  *    diffs cleanly.
+  *    diffs cleanly. It also writes `<outDir>/summary_<suffix>.tsv`, one
+  *    line per query: the static plan's joins, the executed actions'
+  *    joins (each `kind:build side`), both plans' exchange counts and
+  *    the number of actions — the whole-board plan diff in one file.
   *
   * The static-plan VIEW ([[staticSession]] + [[stripOutputSort]]) is
   * shared with `PlanGateSpec` — the audit tool and the regression gates
@@ -111,6 +116,9 @@ object ExplainAudit {
         case _ =>
       }
     })
+    val board = Paths.get(outDir, s"summary_$suffix.tsv")
+    Files.writeString(board,
+      "query\tstatic_joins\texecuted_joins\tstatic_exchanges\texecuted_exchanges\tactions\n")
     names.foreach { n =>
       // executed pass first, so it runs what a query's first call in a
       // JVM runs (scaffold builds included)
@@ -125,9 +133,13 @@ object ExplainAudit {
         (s"# joins: ${summary.mkString(" ")}" +: runs.zipWithIndex.map {
           case ((f, p), i) => s"== ${i + 1} $f ==\n$p"
         }).mkString("\n"))
-      val txt = stripOutputSort(iso, SparkEntry.queries(n)(iso, sfDir))
-        .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-      Files.writeString(Paths.get(outDir, s"${n}_$suffix.txt"), txt)
+      val static = stripOutputSort(iso, SparkEntry.queries(n)(iso, sfDir)).queryExecution
+      Files.writeString(Paths.get(outDir, s"${n}_$suffix.txt"),
+        static.explainString(org.apache.spark.sql.execution.FormattedMode))
+      Files.writeString(board, Seq(n, joins(static.executedPlan).mkString(","),
+        summary.mkString(" "), exchanges(static.executedPlan),
+        runs.map(r => exchanges(r._2)).sum, runs.size).mkString("", "\t", "\n"),
+        java.nio.file.StandardOpenOption.APPEND)
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       println(s"wrote $outDir/${n}_$suffix.txt and ${n}_${suffix}_executed.txt")
     }
@@ -139,16 +151,23 @@ object ExplainAudit {
     case other => other
   }
 
-  /** Join operators of an executed plan, inside query stages and
-    * subqueries too: BHJ broadcast hash, SMJ sort-merge, SHJ shuffled
-    * hash, BNLJ broadcast nested loop, CP cartesian product. */
+  /** Join operators of a plan, inside query stages and subqueries too:
+    * BHJ broadcast hash, SMJ sort-merge, SHJ shuffled hash, BNLJ
+    * broadcast nested loop, CP cartesian product; a `:L`/`:R` suffix
+    * names the build side. */
   private def joins(p: SparkPlan): Seq[String] = PlanWalk.collectWithSubqueries(p) {
-    case _: BroadcastHashJoinExec => "BHJ"
+    case j: BroadcastHashJoinExec => s"BHJ:${side(j.buildSide)}"
     case _: SortMergeJoinExec => "SMJ"
-    case _: ShuffledHashJoinExec => "SHJ"
-    case _: BroadcastNestedLoopJoinExec => "BNLJ"
+    case j: ShuffledHashJoinExec => s"SHJ:${side(j.buildSide)}"
+    case j: BroadcastNestedLoopJoinExec => s"BNLJ:${side(j.buildSide)}"
     case _: CartesianProductExec => "CP"
   }
+
+  private def side(b: BuildSide): String = if (b == BuildLeft) "L" else "R"
+
+  /** Shuffle and broadcast exchanges of a plan (reuses not counted). */
+  private def exchanges(p: SparkPlan): Int =
+    PlanWalk.collectWithSubqueries(p) { case e: Exchange => e }.size
 
   private object PlanWalk extends AdaptiveSparkPlanHelper
 }

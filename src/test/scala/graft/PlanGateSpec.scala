@@ -27,10 +27,14 @@ class PlanGateSpec extends SparkSpec {
     Set("q_bpe_merges", "q_bpe_encode", "q_lm_counts", "q_stream_upsert",
       "q_stationary")
 
-  private lazy val plans: Map[String, String] =
+  private lazy val executions
+      : Map[String, org.apache.spark.sql.execution.QueryExecution] =
     (SparkEntry.queries -- eagerDriverQueries).map { case (name, fn) =>
-      name -> fn(spark, TestSpark.Sf0001).queryExecution.executedPlan.toString
+      name -> fn(spark, TestSpark.Sf0001).queryExecution
     }
+
+  private lazy val plans: Map[String, String] =
+    executions.map { case (name, qe) => name -> qe.executedPlan.toString }
 
   /** Statically planned trees with the deterministic output `orderBy`
     * stripped — the SAME view `tools.ExplainAudit` inspects (shared
@@ -280,6 +284,23 @@ class PlanGateSpec extends SparkSpec {
     iso.conf.set("spark.sql.codegen.fallback", "false")
     val n = SparkEntry.queries("q_career_stats")(iso, TestSpark.Sf0001).count()
     assert(n > 0, "q_career_stats returned no rows under codegen-strict mode")
+  }
+
+  test("no broadcast hint on a side the analyzer bounds") {
+    // A side with a defined maxRows (a global aggregate, a limit, a
+    // literal frame) is sized by its row bound, so JoinSelection
+    // broadcasts it without a hint; a hint there is a second, hand-kept
+    // copy of the planner's decision. Hints stay only on sides whose
+    // size the analyzer cannot bound.
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    val offenders = executions.toSeq.flatMap { case (name, qe) =>
+      qe.analyzed.collectWithSubqueries {
+        case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) &&
+            h.child.maxRows.isDefined => s"$name (maxRows ${h.child.maxRows.get})"
+      }
+    }.distinct.sorted
+    assert(offenders.isEmpty,
+      s"broadcast hint over an analyzer-bounded side in: $offenders")
   }
 
   test("late-batch one-row stat frames broadcast back, never shuffle-join") {
