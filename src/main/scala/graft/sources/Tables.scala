@@ -47,9 +47,9 @@ object Tables {
   // Keyed by (path, signature, floor): the decision compares the table's
   // split count AGAINST the floor, so a context with another
   // defaultParallelism must not reuse a verdict computed against a
-  // different floor — a stale `true`
-  // would re-shuffle an already-parallel corpus DOWN, a stale `false`
-  // would silently disable the fan after the floor is raised.
+  // different floor — a stale `true` would re-shuffle an
+  // already-parallel corpus DOWN, a stale `false` would silently
+  // disable the fan after the floor is raised.
   private val fanDecision = new scala.collection.concurrent.TrieMap[(String, Long, Int), Boolean]
 
   /** Rewrite-sensitive content signature of a local file or parquet
